@@ -7,17 +7,15 @@ model.py:166-184``) on Spark:
 
 - Per-task logistic heads w_t (model.py:150-151) and the task×task
   causality matrix B with fixed zero diagonal (model.py:86-101).
-- The *data-dependent* loss/gradient is distributed: one
-  ``applyInPandas`` pass per iteration grouped by ``(task, salt)``
-  where ``salt = pmod(hash(entity_id), grad_salt)`` — each of the
-  T·grad_salt groups emits one partial row (n, Σloss, Σgrad), and the
-  driver combines the ≤ T·grad_salt tiny rows (sums are associative,
-  so numerics match the unsalted pass up to float reordering).
-  Salting matters because a plain ``groupBy(task)`` with T≈5 tasks
-  would materialize ~1/T of the *whole dataset* inside one Python
-  worker — the hot-key degenerate case ``operators/skew.py`` exists
-  for; with salting no group exceeds ~|data|/(T·grad_salt) rows.
-  Size ``grad_salt`` ≈ shuffle-partitions/T on a real cluster.
+- The *data-dependent* loss/gradient is distributed: one native
+  ``groupBy(task).agg(...)`` pass per iteration.  The current weights
+  ride in as a literal ``task -> array(w)`` map, so each row's logit
+  ``z = Σ x[k]·w[k] + w_bias`` and its CE/gradient terms are Catalyst
+  expressions, and the aggregate emits one row per task
+  (n, Σloss, Σgrad) to the driver.  Hash partial aggregation sums each
+  input partition before the shuffle, so a task's rows never meet in
+  one place: the hot-key case ``operators/skew.py`` salts for does not
+  arise, and no Python worker runs in the loop.
 - The *parameter-space* AMTL terms touch only the [T×D] weight matrix
   and [T×T] B — pure numpy on the driver, exactly like the reference
   keeps them in the TF graph.
@@ -33,7 +31,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,7 +45,6 @@ class AMTLConfig:
     total_iter: int = 20
     check_iter: int = 5
     seed: int = 42
-    grad_salt: int = 8  # partial-aggregation fan-out per task
     # rows per task per iteration (the reference's get_batch minibatch
     # protocol, model.py:187-214); None = full-batch gradients
     batch_size: int | None = None
@@ -71,61 +67,40 @@ class AMTLTrainer:
 
     # ---- distributed piece -------------------------------------------------
 
-    @staticmethod
-    def _partial_grad_fn(W_rows: dict[str, list[float]]):
-        """Grouped-map kernel: per task, sigmoid-CE loss sum + gradient
-        sum for the current broadcast weights (model.py:159 math)."""
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            task = pdf["task"].iloc[0]
-            w = np.asarray(W_rows[task], dtype=np.float64)
-            X = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["x"]])
-            X = np.hstack([X, np.ones((len(X), 1))])  # bias column
-            y = pdf["y"].to_numpy(dtype=np.float64)
-            z = X @ w
-            # stable CE: max(z,0) - z*y + log1p(exp(-|z|))  (model.py:159)
-            loss = np.maximum(z, 0) - z * y + np.log1p(np.exp(-np.abs(z)))
-            p = 1.0 / (1.0 + np.exp(-z))
-            grad = X.T @ (p - y)
-            return pd.DataFrame(
-                {
-                    "task": [task],
-                    "n": [float(len(X))],
-                    "loss_sum": [float(loss.sum())],
-                    "grad": [grad.tolist()],
-                }
-            )
-
-        return fn
-
     def _partials_df(self, feats: DataFrame) -> DataFrame:
-        """The per-iteration distributed pipeline as a DataFrame —
-        exposed separately so ``tests/test_plans.py`` can gate its
-        physical plan (cached scan + exactly one Exchange on the
-        salted group key) against the REAL trainer code path."""
-        fn = self._partial_grad_fn({t: self.W[i].tolist() for i, t in enumerate(self.tasks)})
-        salted = feats.withColumn(
-            "__salt", F.pmod(F.hash("entity_id"), F.lit(self.config.grad_salt))
+        """The per-iteration distributed pipeline as a DataFrame: per
+        task, n, the sigmoid-CE loss sum and the gradient sum (bias
+        last) for the current weights (model.py:159 math).  Exposed
+        separately so ``tests/test_plans.py`` can gate its physical
+        plan (cached scan + exactly one Exchange on ``task``) against
+        the REAL trainer code path."""
+        d = self.W.shape[1] - 1
+        w_of = F.create_map(
+            *[
+                c
+                for t, w in zip(self.tasks, self.W.tolist())
+                for c in (F.lit(t), F.array(*map(F.lit, w)))
+            ]
         )
-        return salted.groupBy("task", "__salt").applyInPandas(
-            fn, schema="task string, n double, loss_sum double, grad array<double>"
+        w, x, y, z = F.col("__w"), F.col("x"), F.col("y"), F.col("__z")
+        logits = feats.select("task", "x", "y", w_of[F.col("task")].alias("__w")).select(
+            "task", "x", "y", sum((x[k] * w[k] for k in range(d)), w[d]).alias("__z")
+        )
+        # stable CE: max(z,0) - z*y + log1p(exp(-|z|))  (model.py:159)
+        loss = F.greatest(z, F.lit(0.0)) - z * y + F.log1p(F.exp(-F.abs(z)))
+        resid = F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - y
+        return logits.groupBy("task").agg(
+            F.count("*").alias("n"),
+            F.sum(loss).alias("loss_sum"),
+            F.array(*[F.sum(resid * x[k]) for k in range(d)], F.sum(resid)).alias("grad"),
         )
 
     def _distributed_partials(self, feats: DataFrame) -> dict[str, tuple[float, float, np.ndarray]]:
-        """Salted two-stage partial aggregation: groups are
-        ``(task, salt)`` so no single Python worker ever receives a
-        whole task's rows; the T·grad_salt partial rows are combined
-        here (associative sums — numerics equal the unsalted pass)."""
-        rows = self._partials_df(feats).collect()
-        out: dict[str, tuple[float, float, np.ndarray]] = {}
-        for r in rows:
-            g = np.asarray(r["grad"])
-            if r["task"] in out:
-                n0, l0, g0 = out[r["task"]]
-                out[r["task"]] = (n0 + r["n"], l0 + r["loss_sum"], g0 + g)
-            else:
-                out[r["task"]] = (r["n"], r["loss_sum"], g)
-        return out
+        """``task -> (n, Σloss, Σgrad)``: one collect of T rows."""
+        return {
+            r["task"]: (r["n"], r["loss_sum"], np.asarray(r["grad"]))
+            for r in self._partials_df(feats).collect()
+        }
 
     # ---- driver-side AMTL math ---------------------------------------------
 
@@ -292,7 +267,6 @@ class AMTLTrainer:
                 "total_iter": cfg.total_iter,
                 "check_iter": cfg.check_iter,
                 "seed": cfg.seed,
-                "grad_salt": cfg.grad_salt,
                 "batch_size": cfg.batch_size,
             },
         }
@@ -307,6 +281,7 @@ class AMTLTrainer:
         import json
 
         meta = json.loads(spark.read.parquet(f"{path}/meta").first()["meta"])
+        meta["config"].pop("grad_salt", None)  # retired option; older checkpoints carry it
         trainer = cls(AMTLConfig(**meta["config"]))
         trainer.config.history = [float(v) for v in meta.get("history", [])]
         trainer.config.eval_history = [

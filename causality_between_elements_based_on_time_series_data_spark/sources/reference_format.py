@@ -41,31 +41,31 @@ def load_data(
     own label — run.py:44-55), so it never depends on entity_id.  The
     id itself comes in two flavors:
 
-    - default (``stable_ids=True``): dense 0-based line numbers via a
-      single-partition ``zipWithIndex`` — exact reference parity: the
+    - default (``stable_ids=True``): dense 0-based line numbers — the
+      file's splits are coalesced into one partition, whose
+      ``monotonically_increasing_id`` counter is then the line number
+      (a file's splits are read back in file order).  Exact reference parity: the
       reference's alignment is positional (run.py:47), so reproducible
       line-number identity is the semantics a user porting it expects.
-      Costs single-task ingestion — right for the reference's own
-      single-node-sized text files.
-    - ``stable_ids=False``: ``monotonically_increasing_id`` — unique
-      but OPAQUE and partitioning-dependent (partition-offset based,
-      so neither dense line numbers nor stable across re-reads of a
-      multi-split file).  The opt-in for 100 TB-scale ingestion where
-      no coalesce / extra pass is acceptable and downstream logic
-      never interprets the id.
+      No eager job and no Python; the cost is single-task ingestion —
+      right for the reference's own single-node-sized text files.
+      Spark's partitioning-aware ``Union`` keeps a union of such
+      single-partition loads (one per task file) in one partition, so
+      parsing, featurizing and a fit over them run as one task with no
+      exchange.
+    - ``stable_ids=False``: ``monotonically_increasing_id`` over the
+      file's own splits — unique but OPAQUE and partitioning-dependent
+      (partition-offset based, so neither dense line numbers nor
+      stable across re-reads of a multi-split file).  The parallel
+      path, for 100 TB-scale ingestion where no coalesce is acceptable
+      and downstream logic never interprets the id.
     """
     full = os.path.join(path, file_name)
     width = steps * num_features
     raw = spark.read.text(full).filter(F.length(F.trim("value")) > 0)
-    if stable_ids:
-        lines = (
-            raw.coalesce(1)
-            .rdd.zipWithIndex()
-            .map(lambda t: (t[0]["value"], t[1]))
-            .toDF(["value", "entity_id"])
-        )
-    else:
-        lines = raw.withColumn("entity_id", F.monotonically_increasing_id())
+    lines = (raw.coalesce(1) if stable_ids else raw).withColumn(
+        "entity_id", F.monotonically_increasing_id()
+    )
     vals = F.transform(F.split(F.trim("value"), r"\s+"), lambda s: s.cast("float"))
     parsed = lines.select(
         "entity_id",

@@ -4,6 +4,8 @@ gradient parity, loss decrease on separable data, B-matrix structure.
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pytest
 
@@ -39,7 +41,7 @@ def test_loss_decreases_and_b_structure(spark, synthetic_feats):
 
 
 def test_distributed_gradient_matches_numpy(spark, synthetic_feats):
-    """The applyInPandas partial-aggregation must equal a single-node
+    """The native per-task gradient aggregate must equal a single-node
     numpy computation of the same CE loss/gradient (model.py:159)."""
     trainer = AMTLTrainer(AMTLConfig())
     trainer.tasks = TASKS
@@ -119,16 +121,15 @@ def test_finite_difference_full_objective():
             np.testing.assert_allclose(grad_B[i, j], fd, rtol=1e-5, atol=1e-8)
 
 
-def test_salted_partials_match_unsalted(spark, synthetic_feats):
-    """Partial sums must be independent of the salt fan-out."""
-    t1 = AMTLTrainer(AMTLConfig(grad_salt=1))
-    t8 = AMTLTrainer(AMTLConfig(grad_salt=8))
-    for tr in (t1, t8):
-        tr.tasks = TASKS
-        rng = np.random.default_rng(3)
-        tr.W = rng.normal(0.0, 0.1, size=(len(TASKS), 3))
-    d1 = t1._distributed_partials(synthetic_feats)
-    d8 = t8._distributed_partials(synthetic_feats)
+def test_partials_invariant_to_partitioning(spark, synthetic_feats):
+    """Partial sums must not depend on how the input is partitioned:
+    hash partial aggregation per partition, then one merge per task."""
+    trainer = AMTLTrainer(AMTLConfig())
+    trainer.tasks = TASKS
+    rng = np.random.default_rng(3)
+    trainer.W = rng.normal(0.0, 0.1, size=(len(TASKS), 3))
+    d1 = trainer._distributed_partials(synthetic_feats.repartition(1))
+    d8 = trainer._distributed_partials(synthetic_feats.repartition(8))
     for task in TASKS:
         assert d1[task][0] == d8[task][0]
         np.testing.assert_allclose(d1[task][1], d8[task][1], rtol=1e-12)
@@ -144,6 +145,15 @@ def test_trainer_save_load_roundtrip(spark, synthetic_feats, tmp_path):
     path = str(tmp_path / "amtl_ckpt")
     trainer.save(spark, path)
     back = AMTLTrainer.load(spark, path)
+    # checkpoints written while AMTLConfig still had grad_salt must load
+    meta = json.loads(spark.read.parquet(f"{path}/meta").first()["meta"])
+    meta["config"]["grad_salt"] = 8
+    spark.createDataFrame([(json.dumps(meta),)], "meta string").write.mode("overwrite").parquet(
+        f"{path}/meta"
+    )
+    old = AMTLTrainer.load(spark, path)
+    assert old.config.lr == trainer.config.lr
+    np.testing.assert_array_equal(old.W, trainer.W)
     assert back.tasks == trainer.tasks
     np.testing.assert_array_equal(back.W, trainer.W)
     np.testing.assert_array_equal(back.B, trainer.B)
@@ -277,8 +287,8 @@ def test_irls_agrees_with_mllib_lbfgs(spark, sf_dir):
 
 
 def test_amtl_driver_rows_bounded_per_step(spark, sf_dir, monkeypatch):
-    """ARCHITECTURE claims the driver receives <= T*grad_salt partial
-    rows per training step; spy on DataFrame.collect during a 2-step
+    """ARCHITECTURE claims the driver receives <= T partial rows (one
+    per task) per training step; spy on DataFrame.collect during a 2-step
     fit and verify no collect exceeds the bound (VERDICT r6 #4)."""
     # patch the CONCRETE class: in Spark 4 pyspark.sql.DataFrame is a
     # facade and instances are classic.dataframe.DataFrame
@@ -305,7 +315,7 @@ def test_amtl_driver_rows_bounded_per_step(spark, sf_dir, monkeypatch):
     train, _ = _split_feats(spark, sf_dir)
     trainer = AMTLTrainer(cfg).fit(train)
     T = len(trainer.tasks)
-    bound = T * cfg.grad_salt
+    bound = T
     assert sizes, "expected collects during fit"
     assert max(sizes) <= bound, (sizes, bound)
 

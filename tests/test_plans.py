@@ -422,7 +422,7 @@ def test_amtl_iteration_plan_cached_scan_single_exchange(spark, sf_dir):
     """ARCHITECTURE's AMTL execution-shape claims, gated (VERDICT r6
     #4): each training iteration reads the PERSISTED featurized input
     (InMemoryTableScan — no re-featurization per step) and shuffles
-    exactly once, on the salted (task, __salt) group key."""
+    exactly once, on the task group key."""
     from causality_between_elements_based_on_time_series_data_spark.ml.amtl import (
         AMTLConfig,
         AMTLTrainer,
@@ -447,7 +447,7 @@ def test_amtl_iteration_plan_cached_scan_single_exchange(spark, sf_dir):
         # the cached relation's stored subtree (below InMemoryRelation)
         # repeats the featurization's exchanges; the LIVE iteration
         # plan is everything above it and must shuffle exactly once —
-        # on the salted (task, __salt) group key
+        # on the task group key
         live = plan.split("InMemoryRelation", 1)[0]
         # the truncated text only keeps the tree section, where the
         # operator renders as "+- Exchange (n)" (details render

@@ -12,6 +12,7 @@ from causality_between_elements_based_on_time_series_data_spark.ml.amtl import (
     AMTLConfig,
     AMTLTrainer,
 )
+from causality_between_elements_based_on_time_series_data_spark.session import scoped_conf
 from causality_between_elements_based_on_time_series_data_spark.sources.reference_format import (
     load_data,
     write_reference_format,
@@ -58,16 +59,25 @@ def test_load_data_values_roundtrip(spark, ref_files):
 
 
 def test_load_data_stable_ids_are_dense_line_numbers(spark, ref_files):
-    df = load_data(spark, FEATS, STEPS, ref_files, "disease_train.txt", task="d", stable_ids=True)
-    ids = sorted(r["entity_id"] for r in df.select("entity_id").distinct().collect())
-    assert ids == list(range(40))  # dense 0-based line numbers
-    # stable across re-reads: per-line label must agree with the file
     with open(f"{ref_files}/disease_train.txt") as f:
         labels = [int(line.split()[-1]) for line in f if line.strip()]
-    got = {
-        r["entity_id"]: r["label"]
-        for r in df.select("entity_id", "label").distinct().collect()
-    }
+
+    def ids_and_labels():
+        df = load_data(spark, FEATS, STEPS, ref_files, "disease_train.txt", task="d", stable_ids=True)
+        ids = sorted(r["entity_id"] for r in df.select("entity_id").distinct().collect())
+        got = {r["entity_id"]: r["label"] for r in df.select("entity_id", "label").distinct().collect()}
+        return ids, got
+
+    ids, got = ids_and_labels()
+    assert ids == list(range(40))  # dense 0-based line numbers
+    # stable across re-reads: per-line label must agree with the file
+    assert got == dict(enumerate(labels))
+    # the same numbering when the file is read as many splits: the
+    # one-partition counter must continue across split boundaries
+    with scoped_conf(spark, "spark.sql.files.maxPartitionBytes", "512"):
+        assert spark.read.text(f"{ref_files}/disease_train.txt").rdd.getNumPartitions() > 1
+        ids, got = ids_and_labels()
+    assert ids == list(range(40))
     assert got == dict(enumerate(labels))
 
 
