@@ -10729,6 +10729,198 @@ def hot_bucket_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# SQ8 kernel set.  SQ8 is uint8 scalar quantization against per-dimension
+# [min, max] ranges, carried as the dimension-aligned arrays ``mns`` /
+# ``mxs``.  Every IVF-SQ8 tier, audit and persisted / segmented probe
+# computes its ranges, codes, nano-unit distances, probe fan-out,
+# candidate join and top-k through the helpers below, so the tiers
+# cannot drift apart.  Each squared per-dimension term is quantized to
+# BIGINT nano-units BEFORE the 64-dim fold, so every distance and error
+# is an exact integer on both engines (order-free, the r13 ADVICE
+# discipline).
+
+# uint8 code of dimension ``d`` of the row's ``embedding`` against its
+# (mns, mxs); a constant dimension (mx == mn) codes to 0
+_SQ8_CODE_SQL = (
+    "CASE WHEN element_at(mxs, d) > element_at(mns, d) THEN "
+    "least(255, greatest(0, cast(round("
+    "(cast(element_at(embedding, d) as double) - element_at(mns, d))"
+    " / ((element_at(mxs, d) - element_at(mns, d)) / 255.0), 0)"
+    " as int))) ELSE 0 END"
+)
+
+
+def _sq8_ranges(df: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, mns, mxs) — the per-dimension [min, max] of ``df``'s
+    ``embedding`` folded into arrays aligned by dimension: no keys
+    gives the one global row, ``"cl"`` one row per inverted list.
+    min/max are order-free exact aggregates, so the ranges and every
+    code derived from them are engine-identical."""
+    return (
+        df.select(*keys, F.posexplode("embedding").alias("d0", "v0"))
+        .select(
+            *keys,
+            (F.col("d0") + 1).alias("d"),
+            F.col("v0").cast("double").alias("v"),
+        )
+        .groupBy(*keys, "d")
+        .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("d", "mn"))),
+                lambda s: s["mn"],
+            ).alias("mns"),
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("d", "mx"))),
+                lambda s: s["mx"],
+            ).alias("mxs"),
+        )
+    )
+
+
+def _sq8_code_from_ranges() -> Column:
+    """uint8 codes of the row's ``embedding`` against its (mns, mxs)
+    range arrays, null-safe for ranges arriving by LEFT join (a
+    segment vector landing in an inverted list the index version has
+    never seen gets all-zero codes; the reconstruction mirror
+    coalesces the same way)."""
+    return F.expr(f"transform(sequence(1, {_RP_DIM}), d -> {_SQ8_CODE_SQL})")
+
+
+def _sq8_nano_sse(x: str, code: str, null_safe: bool) -> Column:
+    """Integer nano-unit squared L2 between the raw array column ``x``
+    and the codes ``code`` (a SQL expression of ``d``) dequantized
+    with the row's (mns, mxs).  ``null_safe`` reconstructs missing
+    ranges to 0.0, mirroring the quantizer's all-zero codes."""
+    mn = "coalesce(element_at(mns, d), 0D)" if null_safe else "element_at(mns, d)"
+    return F.expr(
+        f"aggregate(sequence(1, {_RP_DIM}), 0L, (acc, d) -> acc + "
+        f"cast(round(pow(cast(element_at({x}, d) as double) - ({mn} + "
+        "CASE WHEN element_at(mxs, d) > element_at(mns, d) THEN "
+        "(element_at(mxs, d) - element_at(mns, d)) / 255.0 ELSE 0D END"
+        f" * {code}), 2) * 1e9, 0) as bigint))"
+    )
+
+
+def _sq8_adc_from_codes(null_safe: bool = False) -> Column:
+    """Asymmetric distance between a query's raw dims (``qv``) and a
+    candidate's uint8 ``codes`` dequantized with its list's (mns,
+    mxs).  ``null_safe`` is for LEFT-joined segment probes."""
+    return _sq8_nano_sse("qv", "element_at(codes, d)", null_safe)
+
+
+def _sq8_sse_from_codes() -> Column:
+    """Reconstruction SSE of a row's own ``embedding`` against its
+    persisted ``codes`` — the lifecycle error audit's kernel,
+    null-safe like the quantizer."""
+    return _sq8_nano_sse("embedding", "element_at(codes, d)", null_safe=True)
+
+
+def _sq8_roundtrip_sse() -> Column:
+    """Reconstruction SSE of a row's ``embedding`` quantized and
+    dequantized in one expression against its (mns, mxs) — the
+    quantizer-health audits' kernel (no codes column is built)."""
+    return _sq8_nano_sse("embedding", _SQ8_CODE_SQL, null_safe=False)
+
+
+def _sq8_probe_set(emb: DataFrame, bits: int) -> DataFrame:
+    """(qid, qv, cl) — the query sample with home + every-Hamming-1
+    multi-probe fan-out, shared verbatim by every SQ8 tier."""
+    return (
+        emb.filter(F.col("vec_id") % 100 == 0)
+        .select(
+            F.col("vec_id").alias("qid"),
+            F.col("embedding").alias("qv"),
+            _rp_cluster_spark(bits).alias("cl0"),
+        )
+        .select(
+            "qid",
+            "qv",
+            F.explode(
+                F.array(
+                    F.col("cl0"),
+                    *[
+                        F.col("cl0").bitwiseXOR(F.lit(1 << i))
+                        for i in range(bits)
+                    ],
+                )
+            ).alias("cl"),
+        )
+    )
+
+
+def _sq8_fan_to_children(
+    spark: SparkSession, qs_parent: DataFrame, t_stats: str, bits: int
+) -> DataFrame:
+    """(qid, qv, ..., ckl) — fan a parent-keyed probe set over the
+    persisted index's sub-split geometry; every input column but
+    ``cl`` passes through (e.g. a probe rank).  Parent probes keep
+    their key verbatim (the sub-0 child of a split list retains
+    ``ckl == cl``, and a probe to a list the index never saw — live
+    only on segment reads — stays addressable at ``cl``); each probe
+    whose parent list is SPLIT adds one extra child probe at
+    ``cl + 2^bits``, derived from the persisted stats' parent rows by
+    an INNER join that streams the bucketed stats scan against the
+    broadcast probe set (exchange-free on the index side; BuildRight,
+    never the round-14 inversion).  Candidate sets are exactly the
+    probed parent lists' populations — bit-identical to the plain
+    fan-out."""
+    keep = [c for c in qs_parent.columns if c != "cl"]
+    extra = (
+        _ann_parent_stats(spark, t_stats)
+        .filter(F.col("is_split"))
+        .select("cl")
+        .join(F.broadcast(qs_parent), "cl")
+        .select(*keep, (F.col("cl") + F.lit(1 << bits)).alias("ckl"))
+    )
+    return qs_parent.select(*keep, F.col("cl").alias("ckl")).unionByName(
+        extra
+    )
+
+
+def _sq8_candidates(
+    codes: DataFrame, qs: DataFrame, stats: DataFrame, null_safe: bool = False
+) -> DataFrame:
+    """(qid, ..., nid, dist_nano) — the candidate join of every probe
+    over a persisted codes table: ``codes`` joined on ``ckl`` to the
+    broadcast probe set ``qs`` (self-match excluded, so the bucketed
+    scan is pruned in place), then to the ranges table ``stats``
+    (bucket-co-located on ``ckl``) for the ADC.  Probe columns other
+    than (qid, qv, ckl) pass through after ``qid``.  ``null_safe`` is
+    the segment read: ranges arrive by LEFT join and the ADC
+    reconstructs missing ranges to 0.0."""
+    tags = [c for c in qs.columns if c not in ("qid", "qv", "ckl")]
+    return (
+        codes.join(F.broadcast(qs), "ckl")
+        .filter(F.col("vec_id") != F.col("qid"))
+        .join(stats, "ckl", "left" if null_safe else "inner")
+        .select(
+            "qid",
+            *tags,
+            F.col("vec_id").alias("nid"),
+            _sq8_adc_from_codes(null_safe).alias("dist_nano"),
+        )
+    )
+
+
+def _sq8_topk(j: DataFrame, k: int = 3) -> DataFrame:
+    """Top-``k`` per query with the (dist, id) tiebreak over a
+    candidate relation (qid, nid, dist_nano) — the shared tail of
+    every SQ8 tier (candidate-proportional shuffle: the only Exchange
+    above the index-side joins)."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("qid").orderBy(F.asc("dist_nano"), F.asc("nid"))
+    return (
+        j.withColumn("rn", F.row_number().over(w).cast("int"))
+        .filter(F.col("rn") <= k)
+        .select("qid", "rn", "nid", F.col("dist_nano").alias("adc_nano"))
+        .orderBy("qid", "rn")
+    )
+
+
 def _sq8_oracle() -> str:
     return f"""
     WITH nb AS (
@@ -10834,91 +11026,34 @@ def _sq8_oracle() -> str:
     tags=("llm", "similarity", "layout"),
 )
 def ann_sq8_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, sf_dir, "embeddings")
     bits = _rp_adaptive_bits(emb.count())
-    dims = (
-        emb.select(F.posexplode("embedding").alias("d0", "v0"))
-        .select(
-            (F.col("d0") + 1).alias("d"), F.col("v0").cast("double").alias("v")
-        )
-        .groupBy("d")
-        .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-    )
-    # 64-row dim stats folded to one broadcast row of aligned arrays
-    stats = dims.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "mn"))),
-            lambda s: s["mn"],
-        ).alias("mns"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "mx"))),
-            lambda s: s["mx"],
-        ).alias("mxs"),
-    ).transform(ckpt)  # read by the corpus code pass AND the ADC join
-    code_expr = F.expr(
-        f"transform(sequence(1, {_RP_DIM}), d -> "
-        "CASE WHEN element_at(mxs, d) > element_at(mns, d) THEN "
-        "least(255, greatest(0, cast(round("
-        "(cast(element_at(embedding, d) as double) - element_at(mns, d))"
-        " / ((element_at(mxs, d) - element_at(mns, d)) / 255.0), 0)"
-        " as int))) ELSE 0 END)"
-    )
+    # 64-row dim stats folded to one broadcast row of aligned arrays,
+    # read by the corpus code pass AND the ADC join
+    stats = _sq8_ranges(emb).transform(ckpt)
     corpus = (
         emb.crossJoin(F.broadcast(stats))
         .select(
             "vec_id",
             _rp_cluster_spark(bits).alias("cl"),
-            code_expr.alias("codes"),
+            _sq8_code_from_ranges().alias("codes"),
         )
     )
     # multi-probe: home list + every Hamming-1 neighbor — the same
     # candidate generation as ann_rp_ivf_portable_topk (single-probe
     # here measured recall@3 = the 0.07 pruning ceiling in
     # sq8_recall_audit, round 13; quantization itself loses nothing)
-    qs = (
-        emb.filter(F.col("vec_id") % 100 == 0)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qv"),
-            _rp_cluster_spark(bits).alias("cl0"),
-        )
-        .select(
-            "qid",
-            "qv",
-            F.explode(
-                F.array(
-                    F.col("cl0"),
-                    *[
-                        F.col("cl0").bitwiseXOR(F.lit(1 << i))
-                        for i in range(bits)
-                    ],
-                )
-            ).alias("cl"),
-        )
-    )
-    adc = F.expr(
-        f"aggregate(sequence(1, {_RP_DIM}), 0L, (acc, d) -> acc + "
-        "cast(round(pow("
-        "cast(element_at(qv, d) as double) - (element_at(mns, d) + "
-        "CASE WHEN element_at(mxs, d) > element_at(mns, d) THEN "
-        "(element_at(mxs, d) - element_at(mns, d)) / 255.0 ELSE 0D END"
-        " * element_at(codes, d)), 2) * 1e9, 0) as bigint))"
-    )
     j = (
-        corpus.join(F.broadcast(qs), "cl")
+        corpus.join(F.broadcast(_sq8_probe_set(emb, bits)), "cl")
         .filter(F.col("vec_id") != F.col("qid"))
         .crossJoin(F.broadcast(stats))
-        .select("qid", F.col("vec_id").alias("nid"), adc.alias("dist_nano"))
+        .select(
+            "qid",
+            F.col("vec_id").alias("nid"),
+            _sq8_adc_from_codes().alias("dist_nano"),
+        )
     )
-    w = W.partitionBy("qid").orderBy(F.asc("dist_nano"), F.asc("nid"))
-    return (
-        j.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "rn", "nid", F.col("dist_nano").alias("adc_nano"))
-        .orderBy("qid", "rn")
-    )
+    return _sq8_topk(j)
 
 
 @register(
@@ -10980,39 +11115,9 @@ def sq8_reconstruction_error_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    dims = (
-        emb.select(F.posexplode("embedding").alias("d0", "v0"))
-        .select(
-            (F.col("d0") + 1).alias("d"), F.col("v0").cast("double").alias("v")
-        )
-        .groupBy("d")
-        .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-    )
-    stats = dims.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "mn"))),
-            lambda s: s["mn"],
-        ).alias("mns"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "mx"))),
-            lambda s: s["mx"],
-        ).alias("mxs"),
-    )
-    sse_nano = F.expr(
-        f"aggregate(sequence(1, {_RP_DIM}), 0L, (acc, d) -> acc + "
-        "cast(round(pow(cast(element_at(embedding, d) as double) - "
-        "(element_at(mns, d) + "
-        "CASE WHEN element_at(mxs, d) > element_at(mns, d) THEN "
-        "(element_at(mxs, d) - element_at(mns, d)) / 255.0 ELSE 0D END * "
-        "CASE WHEN element_at(mxs, d) > element_at(mns, d) THEN "
-        "least(255, greatest(0, cast(round("
-        "(cast(element_at(embedding, d) as double) - element_at(mns, d))"
-        " / ((element_at(mxs, d) - element_at(mns, d)) / 255.0), 0)"
-        " as int))) ELSE 0 END), 2) * 1e9, 0) as bigint))"
-    )
     nano = (
-        emb.crossJoin(F.broadcast(stats))
-        .select("label", sse_nano.alias("nano"))
+        emb.crossJoin(F.broadcast(_sq8_ranges(emb)))
+        .select("label", _sq8_roundtrip_sse().alias("nano"))
     )
     return (
         nano.groupBy("label")
@@ -11209,21 +11314,8 @@ def _sq8_recall_report(
     ncl = emb.select(
         F.col("vec_id").alias("nid"), _rp_cluster_spark(bits).alias("ncl")
     )
-    qprobes = (
-        emb.filter(F.col("vec_id") % 100 == 0)
-        .select(F.col("vec_id").alias("pqid"), _rp_cluster_spark(bits).alias("cl0"))
-        .select(
-            "pqid",
-            F.explode(
-                F.array(
-                    F.col("cl0"),
-                    *[
-                        F.col("cl0").bitwiseXOR(F.lit(1 << i))
-                        for i in range(bits)
-                    ],
-                )
-            ).alias("pcl"),
-        )
+    qprobes = _sq8_probe_set(emb, bits).select(
+        F.col("qid").alias("pqid"), F.col("cl").alias("pcl")
     )
     listq = (
         exact3.join(ncl, "nid")
@@ -11406,67 +11498,17 @@ def sq8_cluster_range_refinement(
     base = emb.select(
         "vec_id", "label", "embedding", _rp_cluster_spark(bits).alias("cl")
     ).transform(ckpt)  # read by cluster-stats build AND both error passes
-    gdims = (
-        emb.select(F.posexplode("embedding").alias("d0", "v0"))
-        .select(
-            (F.col("d0") + 1).alias("d"),
-            F.col("v0").cast("double").alias("v"),
-        )
-        .groupBy("d")
-        .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-    )
-    gstats = gdims.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "mn"))),
-            lambda s: s["mn"],
-        ).alias("mns"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "mx"))),
-            lambda s: s["mx"],
-        ).alias("mxs"),
-    )
-    cstats = (
-        base.select("cl", F.posexplode("embedding").alias("d0", "v0"))
-        .select(
-            "cl",
-            (F.col("d0") + 1).alias("d"),
-            F.col("v0").cast("double").alias("v"),
-        )
-        .groupBy("cl", "d")
-        .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-        .groupBy("cl")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "mn"))),
-                lambda s: s["mn"],
-            ).alias("mns"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "mx"))),
-                lambda s: s["mx"],
-            ).alias("mxs"),
-        )
-    )
-    sse_nano = F.expr(
-        f"aggregate(sequence(1, {_RP_DIM}), 0L, (acc, d) -> acc + "
-        "cast(round(pow(cast(element_at(embedding, d) as double) - "
-        "(element_at(mns, d) + "
-        "CASE WHEN element_at(mxs, d) > element_at(mns, d) THEN "
-        "(element_at(mxs, d) - element_at(mns, d)) / 255.0 ELSE 0D END * "
-        "CASE WHEN element_at(mxs, d) > element_at(mns, d) THEN "
-        "least(255, greatest(0, cast(round("
-        "(cast(element_at(embedding, d) as double) - element_at(mns, d))"
-        " / ((element_at(mxs, d) - element_at(mns, d)) / 255.0), 0)"
-        " as int))) ELSE 0 END), 2) * 1e9, 0) as bigint))"
-    )
+    gstats = _sq8_ranges(emb)
+    cstats = _sq8_ranges(base, "cl")
     # global pass: 1-row stats broadcast; cluster pass: stats table is
     # n_lists-sized (grows ~corpus/256 under adaptive bits) -> JOINED
     # on cl, never broadcast (AQE upgrades it at small SF).
     g = (
         emb.crossJoin(F.broadcast(gstats))
-        .select("vec_id", sse_nano.alias("gn"))
+        .select("vec_id", _sq8_roundtrip_sse().alias("gn"))
     )
     c = base.join(cstats, "cl").select(
-        "vec_id", "label", sse_nano.alias("cn")
+        "vec_id", "label", _sq8_roundtrip_sse().alias("cn")
     )
     return (
         c.join(g, "vec_id")
@@ -11592,90 +11634,30 @@ def _sq8pc_oracle() -> str:
     tags=("llm", "similarity", "layout"),
 )
 def ann_sq8pc_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, sf_dir, "embeddings")
     bits = _rp_adaptive_bits(emb.count())
     base = emb.select(
         "vec_id", "embedding", _rp_cluster_spark(bits).alias("cl")
     ).transform(ckpt)  # read by cstats AND the code pass
-    cstats = (
-        base.select("cl", F.posexplode("embedding").alias("d0", "v0"))
-        .select(
-            "cl",
-            (F.col("d0") + 1).alias("d"),
-            F.col("v0").cast("double").alias("v"),
-        )
-        .groupBy("cl", "d")
-        .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-        .groupBy("cl")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "mn"))),
-                lambda s: s["mn"],
-            ).alias("mns"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "mx"))),
-                lambda s: s["mx"],
-            ).alias("mxs"),
-        )
-        .transform(ckpt)  # read by the corpus code pass AND the ADC join
-    )
-    code_expr = F.expr(
-        f"transform(sequence(1, {_RP_DIM}), d -> "
-        "CASE WHEN element_at(mxs, d) > element_at(mns, d) THEN "
-        "least(255, greatest(0, cast(round("
-        "(cast(element_at(embedding, d) as double) - element_at(mns, d))"
-        " / ((element_at(mxs, d) - element_at(mns, d)) / 255.0), 0)"
-        " as int))) ELSE 0 END)"
-    )
+    cstats = _sq8_ranges(base, "cl").transform(
+        ckpt
+    )  # read by the corpus code pass AND the ADC join
     # per-list ranges arrive by JOIN on cl (list count grows with the
     # corpus — never broadcast; AQE upgrades at small SF)
     corpus = base.join(cstats, "cl").select(
-        "vec_id", "cl", code_expr.alias("codes")
-    )
-    qs = (
-        emb.filter(F.col("vec_id") % 100 == 0)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qv"),
-            _rp_cluster_spark(bits).alias("cl0"),
-        )
-        .select(
-            "qid",
-            "qv",
-            F.explode(
-                F.array(
-                    F.col("cl0"),
-                    *[
-                        F.col("cl0").bitwiseXOR(F.lit(1 << i))
-                        for i in range(bits)
-                    ],
-                )
-            ).alias("cl"),
-        )
-    )
-    adc = F.expr(
-        f"aggregate(sequence(1, {_RP_DIM}), 0L, (acc, d) -> acc + "
-        "cast(round(pow("
-        "cast(element_at(qv, d) as double) - (element_at(mns, d) + "
-        "CASE WHEN element_at(mxs, d) > element_at(mns, d) THEN "
-        "(element_at(mxs, d) - element_at(mns, d)) / 255.0 ELSE 0D END"
-        " * element_at(codes, d)), 2) * 1e9, 0) as bigint))"
+        "vec_id", "cl", _sq8_code_from_ranges().alias("codes")
     )
     j = (
-        corpus.join(F.broadcast(qs), "cl")
+        corpus.join(F.broadcast(_sq8_probe_set(emb, bits)), "cl")
         .filter(F.col("vec_id") != F.col("qid"))
         .join(cstats, "cl")  # the candidate's own list ranges
-        .select("qid", F.col("vec_id").alias("nid"), adc.alias("dist_nano"))
+        .select(
+            "qid",
+            F.col("vec_id").alias("nid"),
+            _sq8_adc_from_codes().alias("dist_nano"),
+        )
     )
-    w = W.partitionBy("qid").orderBy(F.asc("dist_nano"), F.asc("nid"))
-    return (
-        j.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "rn", "nid", F.col("dist_nano").alias("adc_nano"))
-        .orderBy("qid", "rn")
-    )
+    return _sq8_topk(j)
 
 
 @register(
@@ -11824,56 +11806,6 @@ def ivf_list_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vectors", which is only true if it is persisted).
 
 
-def _sq8_code_from_ranges() -> Column:
-    """uint8 codes against the row's (mns, mxs) range arrays — the
-    exact quantizer of ann_sq8pc_ivf_topk, null-safe for ranges
-    arriving by LEFT join (a segment vector landing in an inverted
-    list the index version has never seen gets all-zero codes; the
-    reconstruction mirror coalesces the same way)."""
-    return F.expr(
-        f"transform(sequence(1, {_RP_DIM}), d -> "
-        "CASE WHEN element_at(mxs, d) > element_at(mns, d) THEN "
-        "least(255, greatest(0, cast(round("
-        "(cast(element_at(embedding, d) as double) - element_at(mns, d))"
-        " / ((element_at(mxs, d) - element_at(mns, d)) / 255.0), 0)"
-        " as int))) ELSE 0 END)"
-    )
-
-
-def _sq8_adc_from_codes(null_safe: bool = False) -> Column:
-    """Integer nano-unit asymmetric distance between a query's raw
-    dims (``qv``) and a candidate's persisted uint8 ``codes``
-    dequantized with its list's (mns, mxs) — per-dimension BIGINT
-    quantization BEFORE the fold (order-free on both engines, the r13
-    ADVICE discipline).  ``null_safe`` coalesces missing ranges to the
-    all-zero reconstruction (LEFT-joined segment probes)."""
-    mn = "coalesce(element_at(mns, d), 0D)" if null_safe else "element_at(mns, d)"
-    return F.expr(
-        f"aggregate(sequence(1, {_RP_DIM}), 0L, (acc, d) -> acc + "
-        "cast(round(pow("
-        f"cast(element_at(qv, d) as double) - ({mn} + "
-        "CASE WHEN element_at(mxs, d) > element_at(mns, d) THEN "
-        "(element_at(mxs, d) - element_at(mns, d)) / 255.0 ELSE 0D END"
-        " * element_at(codes, d)), 2) * 1e9, 0) as bigint))"
-    )
-
-
-def _sq8_sse_from_codes() -> Column:
-    """Integer nano-unit reconstruction SSE of a row's own
-    ``embedding`` against its persisted ``codes`` dequantized with its
-    list's (mns, mxs) — the lifecycle error audit's kernel, null-safe
-    (missing ranges reconstruct to 0.0, mirroring the quantizer)."""
-    return F.expr(
-        f"aggregate(sequence(1, {_RP_DIM}), 0L, (acc, d) -> acc + "
-        "cast(round(pow("
-        "cast(element_at(embedding, d) as double) - "
-        "(coalesce(element_at(mns, d), 0D) + "
-        "CASE WHEN element_at(mxs, d) > element_at(mns, d) THEN "
-        "(element_at(mxs, d) - element_at(mns, d)) / 255.0 ELSE 0D END"
-        " * element_at(codes, d)), 2) * 1e9, 0) as bigint))"
-    )
-
-
 def _build_persisted_ann_index(
     spark: SparkSession,
     emb: DataFrame,
@@ -11974,75 +11906,6 @@ def _ann_parent_stats(spark: SparkSession, t_stats: str) -> DataFrame:
     )
 
 
-def _sq8_fan_to_children(
-    spark: SparkSession, qs_parent: DataFrame, t_stats: str, bits: int
-) -> DataFrame:
-    """(qid, qv, ckl) — fan a parent-keyed probe set over the
-    persisted index's sub-split geometry.  Parent probes keep their
-    key verbatim (the sub-0 child of a split list retains
-    ``ckl == cl``, and a probe to a list the index never saw — live
-    only on segment reads — stays addressable at ``cl``); each probe
-    whose parent list is SPLIT adds one extra child probe at
-    ``cl + 2^bits``, derived from the persisted stats' parent rows by
-    an INNER join that streams the bucketed stats scan against the
-    broadcast probe set (exchange-free on the index side; BuildRight,
-    never the round-14 inversion).  Candidate sets are exactly the
-    probed parent lists' populations — bit-identical to the plain
-    fan-out."""
-    extra = (
-        _ann_parent_stats(spark, t_stats)
-        .filter(F.col("is_split"))
-        .select("cl")
-        .join(F.broadcast(qs_parent), "cl")
-        .select("qid", "qv", (F.col("cl") + F.lit(1 << bits)).alias("ckl"))
-    )
-    return qs_parent.select(
-        "qid", "qv", F.col("cl").alias("ckl")
-    ).unionByName(extra)
-
-
-def _sq8_probe_set(emb: DataFrame, bits: int) -> DataFrame:
-    """(qid, qv, cl) — the query sample with home + every-Hamming-1
-    multi-probe fan-out, shared verbatim by every SQ8 tier."""
-    return (
-        emb.filter(F.col("vec_id") % 100 == 0)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qv"),
-            _rp_cluster_spark(bits).alias("cl0"),
-        )
-        .select(
-            "qid",
-            "qv",
-            F.explode(
-                F.array(
-                    F.col("cl0"),
-                    *[
-                        F.col("cl0").bitwiseXOR(F.lit(1 << i))
-                        for i in range(bits)
-                    ],
-                )
-            ).alias("cl"),
-        )
-    )
-
-
-def _sq8_topk(j: DataFrame, k: int = 3) -> DataFrame:
-    """Top-``k`` per query with the (dist, id) tiebreak over a
-    candidate relation (qid, nid, dist_nano) — the shared tail of
-    every SQ8 tier (candidate-proportional shuffle: the only Exchange
-    above the index-side joins)."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("qid").orderBy(F.asc("dist_nano"), F.asc("nid"))
-    return (
-        j.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= k)
-        .select("qid", "rn", "nid", F.col("dist_nano").alias("adc_nano"))
-        .orderBy("qid", "rn")
-    )
-
-
 @register(
     "ann_sq8pc_persisted_topk",
     oracle=_sq8pc_oracle(),
@@ -12082,18 +11945,9 @@ def ann_sq8pc_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, emb, "annp"
     )
     qs = _sq8_fan_to_children(spark, _sq8_probe_set(emb, bits), t_stats, bits)
-    j = (
-        spark.table(t_codes)
-        .join(F.broadcast(qs), "ckl")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .join(spark.table(t_stats), "ckl")
-        .select(
-            "qid",
-            F.col("vec_id").alias("nid"),
-            _sq8_adc_from_codes().alias("dist_nano"),
-        )
+    return _sq8_topk(
+        _sq8_candidates(spark.table(t_codes), qs, spark.table(t_stats))
     )
-    return _sq8_topk(j)
 
 
 def _ann_nb_sql(name: str, where: str = "") -> str:
@@ -12264,30 +12118,52 @@ def _build_ann_segmented_index(
     seg_tables: list[str] = []
     for j in range(K):
         t_seg = session_bucket_table(spark, f"{base}_seg{j}_codes")
-        reset_bucket_table(spark, t_seg)
-        (
-            _subsplit_assigned(
-                tail.filter(F.col("seg") == j).select("vec_id", "embedding"),
-                bits,
-            )
-            .join(_ann_parent_stats(spark, t_stats), "cl", "left")
-            .select(
-                "vec_id",
-                F.when(
-                    F.coalesce(F.col("is_split"), F.lit(False))
-                    & (F.col("sub") == 1),
-                    F.col("cl") + F.lit(1 << bits),
-                )
-                .otherwise(F.col("cl"))
-                .alias("ckl"),
-                _sq8_code_from_ranges().alias("codes"),
-            )
-            .write.bucketBy(n_bkts, "ckl")
-            .sortBy("ckl")
-            .saveAsTable(t_seg)
+        _write_ann_segment(
+            spark,
+            tail.filter(F.col("seg") == j).select("vec_id", "embedding"),
+            t_stats,
+            bits,
+            n_bkts,
+            t_seg,
         )
         seg_tables.append(t_seg)
     return t_codes, t_stats, seg_tables, bits, n_bkts, thr
+
+
+def _write_ann_segment(
+    spark: SparkSession,
+    vecs: DataFrame,
+    t_stats: str,
+    bits: int,
+    n_bkts: int,
+    t_seg: str,
+) -> None:
+    """(Re)write ``t_seg`` as the bucketed delta-codes segment of
+    ``vecs`` (vec_id, embedding): assigned with the CURRENT index's
+    cluster geometry and sub-split map, quantized against its CURRENT
+    per-list ranges.  Stats arrive by LEFT join: a vector in a list
+    the index never saw gets all-zero codes and keeps ``ckl == cl``."""
+    from ..sources.catalog import reset_bucket_table
+
+    reset_bucket_table(spark, t_seg)
+    (
+        _subsplit_assigned(vecs, bits)
+        .join(_ann_parent_stats(spark, t_stats), "cl", "left")
+        .select(
+            "vec_id",
+            F.when(
+                F.coalesce(F.col("is_split"), F.lit(False))
+                & (F.col("sub") == 1),
+                F.col("cl") + F.lit(1 << bits),
+            )
+            .otherwise(F.col("cl"))
+            .alias("ckl"),
+            _sq8_code_from_ranges().alias("codes"),
+        )
+        .write.bucketBy(n_bkts, "ckl")
+        .sortBy("ckl")
+        .saveAsTable(t_seg)
+    )
 
 
 @register(
@@ -12504,16 +12380,8 @@ def ann_sq8pc_segmented_probe(
     ).transform(ckpt)  # read by K+1 per-table candidate joins
     cand = None
     for ts in [t_codes] + seg_tables:
-        c = (
-            spark.table(ts)
-            .join(F.broadcast(qs), "ckl")
-            .filter(F.col("vec_id") != F.col("qid"))
-            .join(spark.table(t_stats), "ckl", "left")
-            .select(
-                "qid",
-                F.col("vec_id").alias("nid"),
-                _sq8_adc_from_codes(null_safe=True).alias("dist_nano"),
-            )
+        c = _sq8_candidates(
+            spark.table(ts), qs, spark.table(t_stats), null_safe=True
         )
         cand = c if cand is None else cand.unionByName(c)
     return _sq8_topk(cand)
@@ -13052,17 +12920,7 @@ def _ann_batch_probe(
     if 2 * len(probe_ckls) <= n_children:
         codes = codes.filter(F.col("ckl").isin(probe_ckls))
         stats = stats.filter(F.col("ckl").isin(probe_ckls))
-    j = (
-        codes.join(F.broadcast(qs), "ckl")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .join(stats, "ckl")
-        .select(
-            "qid",
-            F.col("vec_id").alias("nid"),
-            _sq8_adc_from_codes().alias("dist_nano"),
-        )
-    )
-    return _sq8_topk(j)
+    return _sq8_topk(_sq8_candidates(codes, qs, stats))
 
 
 @register(
@@ -13534,53 +13392,21 @@ def ann_probe_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qv"),
         _rp_cluster_spark(bits).alias("cl0"),
     )
+    # each probe carries its rank (pidx) in the _ann_probe_parents order
     probes = q.select(
         "qid",
         "qv",
-        F.explode(
+        F.posexplode(
             F.array(
-                F.struct(
-                    F.lit(0).alias("pidx"), F.col("cl0").alias("cl")
-                ),
-                *[
-                    F.struct(
-                        F.lit(i + 1).alias("pidx"),
-                        F.col("cl0").bitwiseXOR(F.lit(1 << i)).alias("cl"),
-                    )
-                    for i in range(bits)
-                ],
+                F.col("cl0"),
+                *[F.col("cl0").bitwiseXOR(F.lit(1 << i)) for i in range(bits)],
             )
-        ).alias("p"),
-    ).select("qid", "qv", F.col("p.pidx").alias("pidx"), F.col("p.cl").alias("cl"))
-    extra = (
-        _ann_parent_stats(spark, t_stats)
-        .filter(F.col("is_split"))
-        .select("cl")
-        .join(F.broadcast(probes), "cl")
-        .select(
-            "qid",
-            "qv",
-            "pidx",
-            (F.col("cl") + F.lit(1 << bits)).alias("ckl"),
-        )
+        ).alias("pidx", "cl"),
     )
-    qs = (
-        probes.select("qid", "qv", "pidx", F.col("cl").alias("ckl"))
-        .unionByName(extra)
-        .transform(ckpt)  # read by the candidate pass AND nothing else
-    )
-    cand = (
-        spark.table(t_codes)
-        .join(F.broadcast(qs), "ckl")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .join(spark.table(t_stats), "ckl")
-        .select(
-            "qid",
-            "pidx",
-            F.col("vec_id").alias("nid"),
-            _sq8_adc_from_codes().alias("dist_nano"),
-        )
-    )
+    qs = _sq8_fan_to_children(spark, probes, t_stats, bits).transform(
+        ckpt
+    )  # read by the candidate pass AND nothing else
+    cand = _sq8_candidates(spark.table(t_codes), qs, spark.table(t_stats))
     byb = cand.select(
         "qid",
         "nid",

@@ -290,6 +290,51 @@ def test_sq8_adc_topk_is_ranked_and_nonnegative(spark, sf_dir):
         ), (q, rs)
 
 
+def test_sq8_quantizer_edges(spark):
+    """The SQ8 kernel on a hand-built corpus: a constant dimension
+    (mx == mn) codes to 0 and adds nothing to the round-trip SSE, a
+    dimension's maximum codes to 255, and ``_sq8_ranges`` keeps
+    mns/mxs aligned by dimension however the rows are partitioned.
+    Dimension 0 is constant 0.5; dimension k >= 1 takes the values
+    k + 0.25 * (i % 4), which round-trip exactly (codes 0, 85, 170,
+    255), so every row's SSE must be exactly 0."""
+    from pyspark.sql import functions as F
+
+    from causality_between_elements_based_on_time_series_data_spark.plans.queries_llm import (
+        _RP_DIM,
+        _sq8_code_from_ranges,
+        _sq8_ranges,
+        _sq8_roundtrip_sse,
+    )
+
+    rows = [
+        (i, i // 8, [0.5] + [k + 0.25 * (i % 4) for k in range(1, _RP_DIM)])
+        for i in range(16)
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, cl long, embedding array<float>"
+    ).repartition(8)
+    mns = [0.5] + [float(k) for k in range(1, _RP_DIM)]
+    mxs = [0.5] + [k + 0.75 for k in range(1, _RP_DIM)]
+    (g,) = _sq8_ranges(df).collect()
+    assert (list(g.mns), list(g.mxs)) == (mns, mxs)
+    for r in _sq8_ranges(df, "cl").collect():
+        assert (list(r.mns), list(r.mxs)) == (mns, mxs), r.cl
+    out = (
+        df.crossJoin(F.broadcast(_sq8_ranges(df)))
+        .select(
+            "vec_id",
+            _sq8_code_from_ranges().alias("codes"),
+            _sq8_roundtrip_sse().alias("sse"),
+        )
+        .collect()
+    )
+    assert len(out) == 16
+    for r in out:
+        assert r.codes == [0] + [85 * (r.vec_id % 4)] * (_RP_DIM - 1), r
+        assert r.sse == 0, r
+
+
 def test_sq8_recall_audit_floor(spark, sf_dir):
     """Rollout-gate floor (VERDICT r12 #2): the quantized tier must
     keep recall@3 / top-1 agreement vs the exact-L2 baseline above

@@ -5,9 +5,12 @@ count, pushed filters, and any scan reading more columns than the
 query projects.
 
 Usage: `python tools/plan_audit.py [out.md] [--diff PREV.md]
-[--allow q1,q2]` (default stdout).  `--allow` downgrades the named
-queries' count increases to notes — for intentional restructurings
-documented with committed plan dumps in the round report.  Run it after changing a headline query;
+[--allow q1,q2]` (default stdout).  `--allow` (only with `--diff`)
+downgrades the named queries' Exchange-count increases to notes — for
+intentional restructurings documented with committed plan dumps in the
+round report; their BroadcastNestedLoop and Cartesian increases stay
+failures.  Arguments are checked before any query is planned.  Run it
+after changing a headline query;
 `tests/test_plans.py` gates the load-bearing shapes, this report is
 the human-readable sweep across all of them.  Eager-tagged queries are
 skipped by contract (building them runs an action — see
@@ -33,23 +36,53 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 ROW_RE = re.compile(
     r"^\| (\S+) \| (\d+) \| (\d+) \| (\d+) \| (\d+) \| (\d+) \| (\S+) \|$"
 )
+USAGE = "usage: plan_audit.py [out.md] [--diff PREV.md] [--allow q1,q2]"
+
+
+def parse_rows(lines) -> dict[str, dict[str, int]]:
+    out: dict[str, dict[str, int]] = {}
+    for line in lines:
+        m = ROW_RE.match(line.strip())
+        if m:
+            name, ex, bhj, smj, bnlj, cart, _ = m.groups()
+            out[name] = {
+                "exch": int(ex),
+                "bhj": int(bhj),
+                "smj": int(smj),
+                "bnlj": int(bnlj),
+                "cart": int(cart),
+            }
+    return out
 
 
 def parse_audit(path: str) -> dict[str, dict[str, int]]:
-    out: dict[str, dict[str, int]] = {}
     with open(path) as fh:
-        for line in fh:
-            m = ROW_RE.match(line.strip())
-            if m:
-                name, ex, bhj, smj, bnlj, cart, _ = m.groups()
-                out[name] = {
-                    "exch": int(ex),
-                    "bhj": int(bhj),
-                    "smj": int(smj),
-                    "bnlj": int(bnlj),
-                    "cart": int(cart),
-                }
-    return out
+        return parse_rows(fh)
+
+
+def parse_args(argv: list[str]) -> tuple[str | None, str | None, frozenset[str]]:
+    """(out path, --diff path, --allow names) from ``argv``; exits with
+    a usage message on a flag without a value, an unknown flag, more
+    than one output path, ``--allow`` without ``--diff``, or a
+    ``--diff`` file that does not exist."""
+    args = list(argv)
+    vals: dict[str, str] = {}
+    for flag in ("--allow", "--diff"):
+        if flag in args:
+            i = args.index(flag)
+            if i + 1 >= len(args) or args[i + 1].startswith("--"):
+                sys.exit(f"{flag} needs a value\n{USAGE}")
+            vals[flag] = args[i + 1]
+            del args[i : i + 2]
+    if len(args) > 1 or any(a.startswith("--") for a in args):
+        sys.exit(USAGE)
+    prev_path = vals.get("--diff")
+    if "--allow" in vals and prev_path is None:
+        sys.exit(f"--allow only applies with --diff\n{USAGE}")
+    if prev_path is not None and not os.path.isfile(prev_path):
+        sys.exit(f"--diff: no such file: {prev_path}")
+    allow = frozenset(vals.get("--allow", "").split(",")) - {""}
+    return (args[0] if args else None), prev_path, allow
 
 
 def diff_audits(
@@ -58,7 +91,8 @@ def diff_audits(
     """Return (regressions, notes).
 
     ``allow`` names queries whose plan was INTENTIONALLY restructured
-    this round: their count increases are downgraded to notes.  An
+    this round: their Exchange-count increases are downgraded to
+    notes; BNLJ and Cartesian increases stay regressions.  An
     allowance must be justified in the round's OPTIMIZATION report
     with committed before/after (and, where the increase is
     pre-execution re-printing of a shared subtree, executed) plan
@@ -74,7 +108,7 @@ def diff_audits(
         for key in ("exch", "bnlj", "cart"):
             if c[key] > p[key]:
                 msg = f"{name}: {key} {p[key]} -> {c[key]} (plan drift)"
-                if name in allow:
+                if key == "exch" and name in allow:
                     notes.append(f"ALLOWED (intentional this round): {msg}")
                 else:
                     regressions.append(msg)
@@ -89,6 +123,7 @@ def main() -> None:
     from causality_between_elements_based_on_time_series_data_spark.plans import REGISTRY
     from causality_between_elements_based_on_time_series_data_spark.session import get_spark
 
+    out_path, prev_path, allow = parse_args(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("plan-audit")
 
@@ -133,39 +168,17 @@ def main() -> None:
     ]
     text = "\n".join(out) + "\n"
 
-    args = sys.argv[1:]
-    prev_path = None
-    allow: frozenset[str] = frozenset()
-    if "--allow" in args:
-        i = args.index("--allow")
-        allow = frozenset(args[i + 1].split(","))
-        args = args[:i] + args[i + 2 :]
-    if "--diff" in args:
-        i = args.index("--diff")
-        prev_path = args[i + 1]
-        args = args[:i] + args[i + 2 :]
-
-    if args:
-        with open(args[0], "w") as fh:
+    if out_path:
+        with open(out_path, "w") as fh:
             fh.write(text)
-        print(f"wrote {args[0]} ({len(rows)} queries)")
+        print(f"wrote {out_path} ({len(rows)} queries)")
     else:
         print(text)
 
     if prev_path:
-        cur = {}
-        for line in text.splitlines():
-            m = ROW_RE.match(line.strip())
-            if m:
-                name, ex, bhj, smj, bnlj, cart, _ = m.groups()
-                cur[name] = {
-                    "exch": int(ex),
-                    "bhj": int(bhj),
-                    "smj": int(smj),
-                    "bnlj": int(bnlj),
-                    "cart": int(cart),
-                }
-        regressions, notes = diff_audits(parse_audit(prev_path), cur, allow)
+        regressions, notes = diff_audits(
+            parse_audit(prev_path), parse_rows(text.splitlines()), allow
+        )
         for n in notes:
             print(f"[diff note] {n}")
         if regressions:

@@ -235,15 +235,12 @@ def ann() -> None:
     from pyspark.sql import functions as F
 
     from causality_between_elements_based_on_time_series_data_spark.plans.queries_llm import (
-        _ann_parent_stats,
         _build_persisted_ann_index,
-        _rp_adaptive_bits,
-        _rp_cluster_spark,
-        _sq8_adc_from_codes,
-        _sq8_code_from_ranges,
+        _sq8_candidates,
         _sq8_fan_to_children,
+        _sq8_probe_set,
         _sq8_topk,
-        _subsplit_assigned,
+        _write_ann_segment,
     )
     from causality_between_elements_based_on_time_series_data_spark.session import (
         get_spark,
@@ -276,48 +273,15 @@ def ann() -> None:
         return out
 
     def probe_set(emb_k, bits, t_stats):
-        q = emb_k.filter(
-            (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < stride)
-        ).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qv"),
-            _rp_cluster_spark(bits).alias("cl0"),
-        )
-        parents = q.select(
-            "qid",
-            "qv",
-            F.explode(
-                F.array(
-                    F.col("cl0"),
-                    *[
-                        F.col("cl0").bitwiseXOR(F.lit(1 << i))
-                        for i in range(bits)
-                    ],
-                )
-            ).alias("cl"),
-        )
+        parents = _sq8_probe_set(emb_k.filter(F.col("vec_id") < stride), bits)
         return _sq8_fan_to_children(spark, parents, t_stats, bits)
 
     def timed_probe(code_tables, t_stats, qs, null_safe=False) -> float:
         t0 = time.monotonic()
         cand = None
         for ts in code_tables:
-            c = (
-                spark.table(ts)
-                .join(F.broadcast(qs), "ckl")
-                .filter(F.col("vec_id") != F.col("qid"))
-                .join(
-                    spark.table(t_stats),
-                    "ckl",
-                    "left" if null_safe else "inner",
-                )
-                .select(
-                    "qid",
-                    F.col("vec_id").alias("nid"),
-                    _sq8_adc_from_codes(null_safe=null_safe).alias(
-                        "dist_nano"
-                    ),
-                )
+            c = _sq8_candidates(
+                spark.table(ts), qs, spark.table(t_stats), null_safe
             )
             cand = c if cand is None else cand.unionByName(c)
         _sq8_topk(cand).write.format("noop").mode("overwrite").save()
@@ -361,26 +325,13 @@ def ann() -> None:
     seg_tables = []
     for j in range(n_slices):
         t_seg = session_bucket_table(spark, f"annlsm_seg{j}")
-        reset_bucket_table(spark, t_seg)
-        (
-            _subsplit_assigned(
-                batch.filter(F.col("vec_id") % n_slices == j), bits
-            )
-            .join(_ann_parent_stats(spark, t_stats), "cl", "left")
-            .select(
-                "vec_id",
-                F.when(
-                    F.coalesce(F.col("is_split"), F.lit(False))
-                    & (F.col("sub") == 1),
-                    F.col("cl") + F.lit(1 << bits),
-                )
-                .otherwise(F.col("cl"))
-                .alias("ckl"),
-                _sq8_code_from_ranges().alias("codes"),
-            )
-            .write.bucketBy(n_bkts, "ckl")
-            .sortBy("ckl")
-            .saveAsTable(t_seg)
+        _write_ann_segment(
+            spark,
+            batch.filter(F.col("vec_id") % n_slices == j),
+            t_stats,
+            bits,
+            n_bkts,
+            t_seg,
         )
         seg_tables.append(t_seg)
     qs = probe_set(emb_k, bits, t_stats).localCheckpoint(eager=True)
@@ -628,8 +579,8 @@ def annserve() -> None:
     from causality_between_elements_based_on_time_series_data_spark.plans.queries_llm import (
         _ann_batch_probe,
         _build_persisted_ann_index,
-        _rp_cluster_spark,
         _sq8_fan_to_children,
+        _sq8_probe_set,
     )
     from causality_between_elements_based_on_time_series_data_spark.session import (
         get_spark,
@@ -675,27 +626,7 @@ def annserve() -> None:
         )
         build_s = round(time.monotonic() - t0, 3)
         qs_parent = (
-            emb_k.filter(
-                (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < stride)
-            )
-            .select(
-                F.col("vec_id").alias("qid"),
-                F.col("embedding").alias("qv"),
-                _rp_cluster_spark(bits).alias("cl0"),
-            )
-            .select(
-                "qid",
-                "qv",
-                F.explode(
-                    F.array(
-                        F.col("cl0"),
-                        *[
-                            F.col("cl0").bitwiseXOR(F.lit(1 << i))
-                            for i in range(bits)
-                        ],
-                    )
-                ).alias("cl"),
-            )
+            _sq8_probe_set(emb_k.filter(F.col("vec_id") < stride), bits)
             # deliberate bench-isolation checkpoint OUTSIDE the gated
             # query path: the fixed sample must not re-derive per pass
             .localCheckpoint(eager=True)
