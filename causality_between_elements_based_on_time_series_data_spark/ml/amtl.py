@@ -34,6 +34,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.catalog import local_frame
+
 
 @dataclass
 class AMTLConfig:
@@ -211,7 +213,7 @@ class AMTLTrainer:
         """Per-task minimum eval loss + the iteration it occurred —
         the queryable form of the reference's console min-tracking."""
         rows = [(t, float(l), int(i)) for t, (l, i) in sorted(self.eval_min.items())]
-        return spark.createDataFrame(rows, "task string, min_eval_loss double, at_iter int")
+        return local_frame(spark, rows, "task string, min_eval_loss double, at_iter int")
 
     def b_matrix_df(self, spark: SparkSession) -> DataFrame:
         """The causality output as a DataFrame — the engine's analog of
@@ -223,7 +225,7 @@ class AMTLTrainer:
             for j in range(len(self.tasks))
             if i != j
         ]
-        df = spark.createDataFrame(rows, schema="src_task string, dst_task string, weight double")
+        df = local_frame(spark, rows, "src_task string, dst_task string, weight double")
         return df.select("src_task", "dst_task", F.round("weight", 6).alias("weight"))
 
     def write_b_matrix(self, spark: SparkSession, path: str, round_no: int) -> None:
@@ -243,7 +245,7 @@ class AMTLTrainer:
         import json
 
         w_rows = [(t, self.W[i].tolist()) for i, t in enumerate(self.tasks)]
-        spark.createDataFrame(w_rows, "task string, w array<double>").write.mode(
+        local_frame(spark, w_rows, "task string, w array<double>").write.mode(
             "overwrite"
         ).parquet(f"{path}/W")
         b_rows = [
@@ -251,7 +253,7 @@ class AMTLTrainer:
             for i in range(len(self.tasks))
             for j in range(len(self.tasks))
         ]
-        spark.createDataFrame(b_rows, "src_task string, dst_task string, weight double").write.mode(
+        local_frame(spark, b_rows, "src_task string, dst_task string, weight double").write.mode(
             "overwrite"
         ).parquet(f"{path}/B")
         cfg = self.config
@@ -270,7 +272,7 @@ class AMTLTrainer:
                 "batch_size": cfg.batch_size,
             },
         }
-        spark.createDataFrame([(json.dumps(meta),)], "meta string").write.mode(
+        local_frame(spark, [(json.dumps(meta),)], "meta string").write.mode(
             "overwrite"
         ).parquet(f"{path}/meta")
 

@@ -31,6 +31,8 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.catalog import local_frame
+
 
 def parquet_bytes(spark: SparkSession, path: str) -> tuple[int, int]:
     """(total_bytes, n_files) over all part files under ``path``,
@@ -75,7 +77,8 @@ def compact_stats(spark: SparkSession, src: str, dst: str) -> DataFrame:
     """1-row DataFrame of before/after file counts + bytes for audit."""
     b_bytes, b_files = parquet_bytes(spark, src)
     a_bytes, a_files = parquet_bytes(spark, dst)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(b_files, a_files, b_bytes, a_bytes)],
         "files_before int, files_after int, bytes_before long, bytes_after long",
     )

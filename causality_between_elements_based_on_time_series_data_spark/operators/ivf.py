@@ -24,6 +24,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_similarity
+from ..sources.catalog import local_frame
 
 # Average inverted-list target: the cluster count must GROW with the
 # corpus or every probe's list grows linearly with N and the index
@@ -66,7 +67,7 @@ def ivf_assign(
     assigned = model.transform(c).select("nid", "nvec", "cluster")
 
     centers = [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())]
-    centers_df = corpus.sparkSession.createDataFrame(centers, "cluster int, center array<double>")
+    centers_df = local_frame(corpus.sparkSession, centers, "cluster int, center array<double>")
     return assigned, centers_df
 
 

@@ -2868,12 +2868,14 @@ def ccm_cross_mapping_skill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The NN self-join's only equi-key is the series id — a handful of
     # distinct values, so a shuffle join caps parallelism at |series|
     # tasks.  The manifold is the volume-independent grid (|series|*T
-    # rows): broadcast the neighbour side and repartition the probe
-    # side so the O(T^2) pair generation spreads over every core.  At
+    # rows): broadcast the neighbour side and hash the probe side on
+    # (series, hour), which spreads the O(T^2) pair generation over
+    # every core AND leaves the pairs clustered on the rank window's
+    # (ety, t) keys, so the pairs themselves are never shuffled.  At
     # horizons where the grid outgrows a broadcast, coarsen the grid
     # (doc above) — the join shape is unchanged.
     n_part = max(2, spark.sparkContext.defaultParallelism)
-    m1 = manifold.repartition(n_part).alias("m1")
+    m1 = manifold.repartition(n_part, "ety", "hour").alias("m1")
     m2 = F.broadcast(manifold).alias("m2")
     dist = m1.join(
         m2,
@@ -2892,21 +2894,20 @@ def ccm_cross_mapping_skill(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.col("m1.vlag") - F.col("m2.vlag"))
         ).alias("d"),
     )
+    # A lone rank function lets Spark cut each (ety, t) partition to its
+    # top 3 (WindowGroupLimit) before the window; d1, the partition's
+    # minimum distance, is also the minimum of those 3.
     w_rank = Window.partitionBy("ety", "t").orderBy("d", "tn")
-    w_min = Window.partitionBy("ety", "t")
-    ranked = dist.select(
-        "ety",
-        "t",
-        "tn",
-        "d",
-        F.row_number().over(w_rank).alias("rn"),
-        F.min("d").over(w_min).alias("d1"),
-    )
-    neigh = ranked.filter(F.col("rn") <= 3).select(
-        "ety",
-        "t",
-        "tn",
-        F.exp(-F.col("d") / F.greatest(F.col("d1"), F.lit(1e-9))).alias("w"),
+    d1 = F.min("d").over(Window.partitionBy("ety", "t"))
+    neigh = (
+        dist.withColumn("rn", F.row_number().over(w_rank))
+        .filter(F.col("rn") <= 3)
+        .select(
+            "ety",
+            "t",
+            "tn",
+            F.exp(-F.col("d") / F.greatest(d1, F.lit(1e-9))).alias("w"),
+        )
     )
     hx = h.alias("hx")
     neighx = neigh.alias("n").join(

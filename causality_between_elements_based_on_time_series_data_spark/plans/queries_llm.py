@@ -29,7 +29,7 @@ from ..operators.multimodal import (
     to_raw_rgb_media,
 )
 from ..operators.similarity import brute_force_cosine_topk, lsh_cosine_topk
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_frame
 from .registry import register
 
 
@@ -3736,7 +3736,8 @@ def rp_lsh_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stratified_sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    frac = docs.sparkSession.createDataFrame(
+    frac = local_frame(
+        spark,
         [("en", 0.9), ("es", 0.5), ("fr", 0.5), ("de", 0.25), ("zh", 0.25)],
         "lang string, f double",
     )
@@ -6629,9 +6630,7 @@ def dedup_funnel_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("5_component_dropped", n_dropped, 5),
         ("6_final_survivors", n_final, 6),
     ]
-    return spark.createDataFrame(
-        rows, "stage string, n bigint, ord int"
-    ).orderBy("ord")
+    return local_frame(spark, rows, "stage string, n bigint, ord int").orderBy("ord")
 
 
 @register(
@@ -12759,9 +12758,7 @@ def _ann_serve(
         {int(c) for c in probe_parents}
         | {int(r.cl) + (1 << bits) for r in split_rows}
     )
-    qdf = spark.createDataFrame(
-        [(0, [float(x) for x in qv])], "qid long, qv array<float>"
-    )
+    qdf = local_frame(spark, [(0, [float(x) for x in qv])], "qid long, qv array<float>")
     stats = spark.table(t_stats).filter(F.col("ckl").isin(probe_ckls))
     cand = None
     for ts in code_tables:

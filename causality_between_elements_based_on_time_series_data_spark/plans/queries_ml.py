@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..ml.amtl import AMTLConfig, AMTLTrainer
 from ..ml.retain import retain_entity_features
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_frame
 from .registry import register, sql_tanh
 
 
@@ -79,7 +79,7 @@ def amtl_causality_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def amtl_training_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = _trained_amtl(spark, sf_dir).config
     rows = [(i, float(v)) for i, v in enumerate(cfg.history)]
-    return spark.createDataFrame(rows, "checkpoint int, total_loss double").select(
+    return local_frame(spark, rows, "checkpoint int, total_loss double").select(
         "checkpoint", F.round("total_loss", 6).alias("total_loss")
     )
 
@@ -106,7 +106,7 @@ def amtl_train_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     train, _ = _split_feats(spark, sf_dir)
     AMTLTrainer(cfg).fit(train)
     rows = [(i, float(v)) for i, v in enumerate(cfg.history)]
-    return spark.createDataFrame(rows, "checkpoint int, total_loss double").select(
+    return local_frame(spark, rows, "checkpoint int, total_loss double").select(
         "checkpoint", F.round("total_loss", 6).alias("total_loss")
     )
 
@@ -169,7 +169,7 @@ def amtl_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         (t, [float(v) for v in trainer.W[i][:-1]], float(trainer.W[i][-1]))
         for i, t in enumerate(trainer.tasks)
     ]
-    w_df = spark.createDataFrame(w_rows, "task string, w array<double>, bias double")
+    w_df = local_frame(spark, w_rows, "task string, w array<double>, bias double")
     scored = ds.join(F.broadcast(w_df), "task").select(
         "task",
         "entity_id",

@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 
 from ..lineage import ckpt
 
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_frame
 from .registry import register
 
 _DAYNUM_SQL = (
@@ -2200,7 +2200,8 @@ def bacon_did_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("yc").cast("bigint").alias("s"))
         .transform(ckpt)  # four window-role joins read it
     )
-    comp = spark.createDataFrame(
+    comp = local_frame(
+        spark,
         _bacon_components(),
         "comparison string, g_treat int, g_ctrl int, pre_a int, "
         "pre_b int, post_a int, post_b int, dcoef16 int",

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..lineage import ckpt
 
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_frame
 from .registry import register
 
 CUTOFF = "1998-09-02"
@@ -2649,7 +2649,8 @@ def observe_scan_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     row = agg.collect()[0]  # the action that also populates the observation
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 row["n_high_value"],

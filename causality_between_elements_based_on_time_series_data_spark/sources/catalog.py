@@ -7,6 +7,12 @@ kept here as *declared* StructType schemas validated against what the
 parquet footer actually carries.  Parquet is the primary format
 (columnar scans, predicate pushdown, column pruning all free from
 Catalyst); csv/json ingestion reuses the same declared schemas.
+
+Each fixture file's schema is inferred from its parquet footer once per
+file version and process (:data:`_SCHEMAS`); later reads pass that
+schema to the reader, so they list the file but schedule no footer job:
+a session runs many short queries, and a footer job per read would be a
+fixed cost on each of them.
 """
 
 from __future__ import annotations
@@ -115,12 +121,39 @@ TABLES: dict[str, T.StructType] = {
 }
 
 
+# (path, st_mtime_ns, st_size, nanosAsLong) -> the footer-inferred schema.
+# Threads may race on a miss; the loser only infers the same schema twice.
+_SCHEMAS: dict[tuple[str, int, int, str], T.StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the footer schema inferred once per
+    file version.  The key holds mtime and size so a path rewritten in
+    the same session is inferred afresh, and the ``nanosAsLong`` value in
+    effect because it changes the type a TIMESTAMP(NANOS) column infers
+    to.  A path ``os.stat`` cannot see (a remote URI, a missing file) is
+    read without the memo, so Spark reports its own error."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    key = (path, st.st_mtime_ns, st.st_size, nanos)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table.
 
-    Plain ``spark.read.parquet`` so Catalyst owns pushdown/pruning; the
-    declared schema is documentation + text-format contract, not a cast
-    (casting would defeat parquet filter pushdown on mismatched types).
+    A parquet read so Catalyst owns pushdown/pruning; the declared
+    schema is documentation + text-format contract, not a cast (casting
+    would defeat parquet filter pushdown on mismatched types).  The
+    schema the reader is given is the file's own footer schema, inferred
+    on the first read of each file version (:func:`_read_parquet`), so
+    repeated reads of a table start no Spark job.
 
     ``events.ts`` is physically TIMESTAMP(NANOS) in the fixture, which
     Spark's vectorized reader rejects; it is read as nanos-since-epoch
@@ -147,7 +180,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from ..session import scoped_conf
 
         with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
-            df = spark.read.parquet(path)
+            df = _read_parquet(spark, path)
             # fixture generations differ: TIMESTAMP(NANOS) surfaces as
             # bigint under nanosAsLong and needs the µs truncation;
             # TIMESTAMP(MICROS) (isAdjustedToUTC=false) reads as
@@ -173,7 +206,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                     "ts", F.from_utc_timestamp(F.col("ts").cast("timestamp"), tz)
                 )
             return df
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A driver-side DataFrame of ``rows`` with the DDL schema ``ddl``.
+
+    The rows travel as one ``pyarrow.Table``, so the plan is a
+    ``LocalTableScan`` and no Python worker starts; ``createDataFrame``
+    on a list pickles the rows through a Python RDD, and the first such
+    call in a session waits over a second for its workers.  A
+    ``pa.Table`` takes the Arrow path whatever the session's Arrow conf.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(T.StructType.fromDDL(ddl))
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+        )
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:

@@ -384,6 +384,15 @@ def test_ccm_neighbour_join_is_broadcast(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
+def test_ccm_pairs_rank_without_a_shuffle(spark, sf_dir):
+    # the probe side is hashed on (series, hour), so the O(T^2) pairs
+    # reach the (ety, t) rank window already clustered, and the lone
+    # row_number lets Spark cut each partition to its top 3 first
+    plan = plan_of(spark, sf_dir, "ccm_cross_mapping_skill")
+    assert "WindowGroupLimit" in plan, plan
+    assert not re.search(r"hashpartitioning\(ety#\d+, t#\d+", plan), plan
+
+
 def test_countmin_counters_reduce_before_exchange(spark, sf_dir):
     # the d*w counter build must partial-aggregate the exploded cells
     # map-side: a HashAggregate below the Exchange that feeds the
