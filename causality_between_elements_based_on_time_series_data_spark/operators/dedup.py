@@ -8,7 +8,13 @@ Four tiers, all shuffle-disciplined for 100 TB:
   band-equal pairs are candidates, keeping the join out of O(n²).
 - **SimHash**: 64-bit near-dup fingerprint, map-side only.
 - **n-gram Jaccard**: exact token-set similarity for candidate pairs
-  via an inverted-index (explode + equi-join) formulation.
+  via an inverted-index (explode + equi-join) formulation —
+  :func:`word_set` builds the ``(doc_id, w)`` postings,
+  :func:`set_overlap` joins them under a candidate-pair relation, and
+  :func:`jaccard` scores its columns.  The dedup family's candidate
+  verifies run through these three; only shapes they cannot express
+  (anchor-mode pairs, the prefix filter's shared sizes, the
+  zero-overlap-keeping left join) stay inline.
 
 Hash functions are Spark's ``xxhash64`` (JVM-side, codegen); hash
 values are engine-specific, so LSH/SimHash queries take the driver's
@@ -185,3 +191,63 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         lambda acc, b: acc.bitwiseOR(b),
     )
     return df.select(F.col(id_col), sim.alias("simhash"))
+
+
+def word_set(rel: DataFrame) -> DataFrame:
+    """``(doc_id, w)`` — one row per distinct whitespace word of each
+    document in ``rel`` (which carries ``doc_id`` and ``text``).  The
+    verify tier's token set.  A verify that reads candidates only
+    semi-joins ``rel`` down to the candidate documents before calling
+    it, so the explode runs over candidate text, not corpus text."""
+    return rel.select(
+        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")
+    )
+
+
+def set_overlap(
+    cand: DataFrame, tok_a: DataFrame, tok_b: DataFrame | None = None
+) -> DataFrame:
+    """``(id_a, id_b, n_common, sz_a, sz_b)`` for the candidate pairs
+    ``cand(id_a, id_b)`` that share at least one token: ``n_common``
+    counts the shared ``w`` of the two ``(doc_id, w)`` posting lists,
+    ``sz_a`` / ``sz_b`` are the set sizes of ``id_a`` in ``tok_a`` and
+    of ``id_b`` in ``tok_b`` (default ``tok_a``).  The intersection is
+    an equi-join on (doc, token) under the candidate relation — cost
+    follows candidate mass, never corpus² — and the per-doc sizes join
+    back after the aggregate.  Thresholds and ratios are the caller's
+    (see :func:`jaccard`)."""
+    tok_b = tok_a if tok_b is None else tok_b
+    sz_a, sz_b = (
+        t.groupBy("doc_id").agg(F.count("*").alias("sz")) for t in (tok_a, tok_b)
+    )
+    inter = (
+        cand.join(tok_a.alias("ta"), F.col("ta.doc_id") == F.col("id_a"))
+        .join(
+            tok_b.alias("tb"),
+            (F.col("tb.doc_id") == F.col("id_b"))
+            & (F.col("ta.w") == F.col("tb.w")),
+        )
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("n_common"))
+    )
+    # per-doc sizes are corpus-proportional — never hinted; AQE
+    # broadcasts them while they fit and shuffle-joins beyond
+    return (
+        inter.join(sz_a.alias("sa"), F.col("sa.doc_id") == F.col("id_a"))
+        .join(sz_b.alias("sb"), F.col("sb.doc_id") == F.col("id_b"))
+        .select(
+            "id_a",
+            "id_b",
+            "n_common",
+            F.col("sa.sz").alias("sz_a"),
+            F.col("sb.sz").alias("sz_b"),
+        )
+    )
+
+
+def jaccard() -> Column:
+    """Token-set Jaccard of a :func:`set_overlap` row:
+    ``|A ∩ B| / (|A| + |B| − |A ∩ B|)``."""
+    return F.col("n_common").cast("double") / (
+        F.col("sz_a") + F.col("sz_b") - F.col("n_common")
+    )

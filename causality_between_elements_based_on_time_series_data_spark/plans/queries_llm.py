@@ -18,9 +18,12 @@ from ..functions.text import stopword_hits, token_count
 from ..operators.dedup import (
     _shingles,
     dedup_exact,
+    jaccard,
     lsh_candidate_pairs,
     minhash_signatures,
+    set_overlap,
     simhash64,
+    word_set,
 )
 from ..operators.multimodal import (
     RAW_RGB_MIME,
@@ -239,9 +242,7 @@ def ngram_jaccard_pairs(
     # the token posting list feeds the df cut, per-doc sizes, and both
     # sides of the intersection join: cut the lineage so the explode
     # runs once, not once per consumer
-    tok0 = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("w")
-    ).transform(ckpt)
+    tok0 = word_set(docs).transform(ckpt)
     # hot-token document-frequency cut: tok0 rows are distinct per doc,
     # so count(*) per token IS its document frequency
     dfreq = tok0.groupBy("w").agg(F.count("*").alias("df"))
@@ -261,9 +262,7 @@ def ngram_jaccard_pairs(
         # whole production route is oracle-checkable end-to-end; the
         # xxhash64 tier (minhash_lsh_candidates) remains the drop-in
         # swap when raw hash throughput matters more than parity.
-        cands = portable_band_pairs(portable_signatures(docs)).select(
-            F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
-        )
+        cands = band_candidates(portable_signatures(docs))
         inter = (
             cands.join(tok.alias("ta"), F.col("ta.doc_id") == F.col("id_a"))
             .join(
@@ -537,29 +536,12 @@ def dedup_pipeline_survivors(
     # tier 2: sub-quadratic near-dup candidates — portable band tier
     # (oracle-reproducible md5 hashes; xxhash64 tier is the drop-in
     # swap for raw hash throughput)
-    cands = portable_band_pairs(portable_signatures(s1)).select(
-        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
-    )
+    cands = band_candidates(portable_signatures(s1))
 
     # tier 3: exact token-Jaccard verification on candidates only
-    tok = s1.select("doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w"))
-    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    inter = (
-        cands.join(tok.alias("ta"), F.col("ta.doc_id") == F.col("id_a"))
-        .join(
-            tok.alias("tb"),
-            (F.col("tb.doc_id") == F.col("id_b")) & (F.col("ta.w") == F.col("tb.w")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.col("n_common").cast("double") / (F.col("sa.sz") + F.col("sb.sz") - F.col("n_common"))
-    # sizes is corpus-proportional — never hinted; AQE broadcasts it
-    # while it fits and shuffle-joins beyond
     verified = (
-        inter.join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("id_a"))
-        .join(sizes.alias("sb"), F.col("sb.doc_id") == F.col("id_b"))
-        .filter(jac >= jaccard_threshold)
+        set_overlap(cands, word_set(s1))
+        .filter(jaccard() >= jaccard_threshold)
         .select("id_a", "id_b")
     )
 
@@ -2411,6 +2393,15 @@ def portable_band_pairs(sig: DataFrame) -> DataFrame:
     )
 
 
+def band_candidates(sig: DataFrame) -> DataFrame:
+    """(id_a, id_b) — :func:`portable_band_pairs` in the candidate-pair
+    shape the exact verify tier (``operators.dedup.set_overlap``)
+    reads."""
+    return portable_band_pairs(sig).select(
+        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
+    )
+
+
 @register(
     "repetition_signals",
     oracle="""
@@ -3884,9 +3875,7 @@ def tfidf_doc_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")
-    )
+    toks = word_set(docs)
     dfreq = toks.groupBy("w").agg(F.count("*").cast("double").alias("df"))
     nd = docs.agg(F.count("*").cast("double").alias("n"))
     wtok = (
@@ -5678,9 +5667,7 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")
-    ).transform(ckpt)
+    tok = word_set(docs).transform(ckpt)
     df_t = tok.groupBy("w").agg(F.count("*").cast("bigint").alias("dfreq"))
     # the shared bucket+offset device (operators/ranks.py): dfreq-range
     # buckets (Zipf makes dfreq=mn the hot bucket — a straggler on a
@@ -5855,11 +5842,7 @@ def _minhash_calibration_oracle() -> str:
 def minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sig = portable_signatures(docs).transform(ckpt)
-    cand = (
-        portable_band_pairs(sig)
-        .select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"))
-        .transform(ckpt)
-    )
+    cand = band_candidates(sig).transform(ckpt)
     sa, sb = sig.alias("sa"), sig.alias("sb")
     n_eq = None
     for i in range(16):
@@ -5872,35 +5855,16 @@ def minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c.id_a", "c.id_b", n_eq.cast("bigint").alias("n_eq"))
     )
     tok = docs.select(
-        "doc_id", F.explode(_shingles(F.col("text"), 3)).alias("tok")
+        "doc_id", F.explode(_shingles(F.col("text"), 3)).alias("w")
     ).distinct().transform(ckpt)
-    sizes = tok.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("sz"))
-    ta, tb = tok.alias("ta"), tok.alias("tb")
-    inter = (
-        cand.alias("c")
-        .join(ta, F.col("ta.doc_id") == F.col("c.id_a"))
-        .join(
-            tb,
-            (F.col("tb.doc_id") == F.col("c.id_b"))
-            & (F.col("tb.tok") == F.col("ta.tok")),
-        )
-        .groupBy("c.id_a", "c.id_b")
-        .agg(F.count("*").cast("bigint").alias("n_common"))
-    )
-    sza, szb = sizes.alias("sza"), sizes.alias("szb")
-    true_j = F.col("n_common").cast("double") / (
-        F.col("sza.sz") + F.col("szb.sz") - F.col("n_common")
-    )
     scored = (
         eqs.alias("e")
         .join(
-            inter.alias("i"),
+            set_overlap(cand, tok).alias("i"),
             (F.col("i.id_a") == F.col("e.id_a"))
             & (F.col("i.id_b") == F.col("e.id_b")),
         )
-        .join(sza, F.col("sza.doc_id") == F.col("e.id_a"))
-        .join(szb, F.col("szb.doc_id") == F.col("e.id_b"))
-        .select(F.col("e.n_eq").alias("n_eq"), true_j.alias("true_j"))
+        .select(F.col("e.n_eq").alias("n_eq"), jaccard().alias("true_j"))
     )
     return (
         scored.groupBy("n_eq")
@@ -6580,39 +6544,13 @@ def dedup_funnel_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = dedup_exact(docs).select(F.col("keep_doc_id").alias("doc_id"))
     sdocs = docs.join(keep, "doc_id", "semi").transform(ckpt)
     n_exact = sdocs.count()
-    cand = (
-        portable_band_pairs(portable_signatures(sdocs))
-        .select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"))
-        .transform(ckpt)
-    )
+    cand = band_candidates(portable_signatures(sdocs)).transform(ckpt)
     n_cand = cand.count()
-    tok = sdocs.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")
-    ).transform(ckpt)
-    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    ta, tb = tok.alias("ta"), tok.alias("tb")
-    inter = (
-        cand.alias("c")
-        .join(ta, F.col("ta.doc_id") == F.col("c.id_a"))
-        .join(
-            tb,
-            (F.col("tb.doc_id") == F.col("c.id_b"))
-            & (F.col("tb.w") == F.col("ta.w")),
-        )
-        .groupBy("c.id_a", "c.id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
+    tok = word_set(sdocs).transform(ckpt)
     prs = (
-        inter.alias("i")
-        .join(sa, F.col("sa.doc_id") == F.col("i.id_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("i.id_b"))
-        .filter(
-            F.col("n_common").cast("double")
-            / (F.col("sa.sz") + F.col("sb.sz") - F.col("n_common"))
-            >= 0.8
-        )
-        .select(F.col("i.id_a").alias("src"), F.col("i.id_b").alias("dst"))
+        set_overlap(cand, tok)
+        .filter(jaccard() >= 0.8)
+        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .transform(ckpt)
     )
     n_verified = prs.count()
@@ -6727,41 +6665,19 @@ def encoding_anomaly_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def containment_pairs_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    cand = (
-        portable_band_pairs(portable_signatures(docs))
-        .select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"))
-        .transform(ckpt)
-    )
+    cand = band_candidates(portable_signatures(docs)).transform(ckpt)
     tok = docs.select(
-        "doc_id", F.explode(_shingles(F.col("text"), 3)).alias("tok")
+        "doc_id", F.explode(_shingles(F.col("text"), 3)).alias("w")
     ).distinct().transform(ckpt)
-    sizes = tok.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("sz"))
-    ta, tb = tok.alias("ta"), tok.alias("tb")
-    inter = (
-        cand.alias("c")
-        .join(ta, F.col("ta.doc_id") == F.col("c.id_a"))
-        .join(
-            tb,
-            (F.col("tb.doc_id") == F.col("c.id_b"))
-            & (F.col("tb.tok") == F.col("ta.tok")),
-        )
-        .groupBy("c.id_a", "c.id_b")
-        .agg(F.count("*").cast("bigint").alias("n_common"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    ca = F.col("n_common").cast("double") / F.col("sa.sz")
-    cb = F.col("n_common").cast("double") / F.col("sb.sz")
-    jac = F.col("n_common").cast("double") / (
-        F.col("sa.sz") + F.col("sb.sz") - F.col("n_common")
-    )
+    ca = F.col("n_common").cast("double") / F.col("sz_a")
+    cb = F.col("n_common").cast("double") / F.col("sz_b")
+    jac = jaccard()
     return (
-        inter.alias("i")
-        .join(sa, F.col("sa.doc_id") == F.col("i.id_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("i.id_b"))
+        set_overlap(cand, tok)
         .filter(F.greatest(ca, cb) >= 0.5)
         .select(
-            F.col("i.id_a").alias("id_a"),
-            F.col("i.id_b").alias("id_b"),
+            "id_a",
+            "id_b",
             F.round(ca, 4).alias("containment_a"),
             F.round(cb, 4).alias("containment_b"),
             F.round(jac, 4).alias("jaccard"),
@@ -7077,6 +6993,33 @@ def _incremental_dedup_oracle() -> str:
     """
 
 
+def _batch_dup_report(
+    batch: DataFrame, exact: DataFrame, near: DataFrame
+) -> DataFrame:
+    """The incremental-dedup report: per ``lang`` of the new ``batch``
+    (doc_id, lang, ...), its size and how many of its docs are exact
+    dups (ids in ``exact``), near dups (ids in ``near``, disjoint
+    from ``exact``) or kept — one left-join pair and one lang-keyed
+    aggregate, shared by every incremental probe."""
+    flagged_e = exact.withColumn("_e", F.lit(1))
+    flagged_n = near.withColumn("_n", F.lit(1))
+    return (
+        batch.select("doc_id", "lang")
+        .join(flagged_e, "doc_id", "left")
+        .join(flagged_n, "doc_id", "left")
+        .groupBy("lang")
+        .agg(
+            F.count("*").cast("bigint").alias("n_new"),
+            F.sum(F.coalesce("_e", F.lit(0))).cast("bigint").alias("n_exact_dup"),
+            F.sum(F.coalesce("_n", F.lit(0))).cast("bigint").alias("n_near_dup"),
+            F.sum(
+                (F.col("_e").isNull() & F.col("_n").isNull()).cast("int")
+            ).cast("bigint").alias("n_kept"),
+        )
+        .orderBy("lang")
+    )
+
+
 @register(
     "incremental_dedup_new_batch",
     oracle=_incremental_dedup_oracle(),
@@ -7158,62 +7101,21 @@ def incremental_dedup_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_ids = cand.select(
         F.explode(F.array("id_a", "id_b")).alias("doc_id")
     ).distinct()
-    tok = (
-        docs.select("doc_id", "text")
-        .join(cand_ids, "doc_id", "semi")
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split("text", " "))).alias("w"),
-        )
-        # candidate-bounded words, NOT corpus text (the metadata-only
-        # cut rule's payload exception doesn't apply): one tokenize
-        # pass feeds all three readers (sizes, ta, tb)
-        .transform(ckpt)
-    )
-    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    inter = (
-        cand.join(tok.alias("ta"), F.col("ta.doc_id") == F.col("id_a"))
-        .join(
-            tok.alias("tb"),
-            (F.col("tb.doc_id") == F.col("id_b"))
-            & (F.col("ta.w") == F.col("tb.w")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("sa.sz") + F.col("sb.sz") - F.col("n_common")
-    )
+    # candidate-bounded words, NOT corpus text (the metadata-only cut
+    # rule's payload exception doesn't apply): one tokenize pass feeds
+    # all three readers (sizes, ta, tb)
+    tok = word_set(
+        docs.select("doc_id", "text").join(cand_ids, "doc_id", "semi")
+    ).transform(ckpt)
     near = (
-        inter.join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("id_a"))
-        .join(sizes.alias("sb"), F.col("sb.doc_id") == F.col("id_b"))
-        .filter(jac >= 0.8)
+        set_overlap(cand, tok)
+        .filter(jaccard() >= 0.8)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
         .join(exact, "doc_id", "anti")
     )
 
-    batch = witht.filter(is_new).select("doc_id", "lang")
-    flagged_e = exact.withColumn("_e", F.lit(1))
-    flagged_n = near.withColumn("_n", F.lit(1))
-    return (
-        batch.join(flagged_e, "doc_id", "left")
-        .join(flagged_n, "doc_id", "left")
-        .groupBy("lang")
-        .agg(
-            F.count("*").cast("bigint").alias("n_new"),
-            F.sum(F.coalesce("_e", F.lit(0))).cast("bigint").alias(
-                "n_exact_dup"
-            ),
-            F.sum(F.coalesce("_n", F.lit(0))).cast("bigint").alias(
-                "n_near_dup"
-            ),
-            F.sum(
-                (F.col("_e").isNull() & F.col("_n").isNull()).cast("int")
-            ).cast("bigint").alias("n_kept"),
-        )
-        .orderBy("lang")
-    )
+    return _batch_dup_report(witht.filter(is_new), exact, near)
 
 
 @register(
@@ -7908,30 +7810,10 @@ def corpus_stage_tables(
     # (each text consumer re-derives from the pruned scan — map-side
     # explodes, no text ever checkpointed)
     s3_text = texts_of(s3)
-    cands = portable_band_pairs(portable_signatures(s3_text)).select(
-        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
-    )
-    tokd = s3_text.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")
-    )
-    sizes = tokd.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    inter = (
-        cands.join(tokd.alias("ta"), F.col("ta.doc_id") == F.col("id_a"))
-        .join(
-            tokd.alias("tb"),
-            (F.col("tb.doc_id") == F.col("id_b"))
-            & (F.col("ta.w") == F.col("tb.w")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("sa.sz") + F.col("sb.sz") - F.col("n_common")
-    )
+    cands = band_candidates(portable_signatures(s3_text))
     dropped4 = (
-        inter.join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("id_a"))
-        .join(sizes.alias("sb"), F.col("sb.doc_id") == F.col("id_b"))
-        .filter(jac >= 0.8)
+        set_overlap(cands, word_set(s3_text))
+        .filter(jaccard() >= 0.8)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
     )
@@ -8276,61 +8158,20 @@ def incremental_dedup_persisted_index(
     cand_ids = cand.select(
         F.explode(F.array("id_a", "id_b")).alias("doc_id")
     ).distinct()
-    tok = (
-        docs.select("doc_id", "text")
-        .join(cand_ids, "doc_id", "semi")
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split("text", " "))).alias("w"),
-        )
-        # candidate-bounded words, NOT corpus text: one tokenize pass
-        # feeds all three readers (sizes, ta, tb)
-        .transform(ckpt)
-    )
-    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    inter = (
-        cand.join(tok.alias("ta"), F.col("ta.doc_id") == F.col("id_a"))
-        .join(
-            tok.alias("tb"),
-            (F.col("tb.doc_id") == F.col("id_b"))
-            & (F.col("ta.w") == F.col("tb.w")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("sa.sz") + F.col("sb.sz") - F.col("n_common")
-    )
+    # candidate-bounded words, NOT corpus text: one tokenize pass
+    # feeds all three readers (sizes, ta, tb)
+    tok = word_set(
+        docs.select("doc_id", "text").join(cand_ids, "doc_id", "semi")
+    ).transform(ckpt)
     near = (
-        inter.join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("id_a"))
-        .join(sizes.alias("sb"), F.col("sb.doc_id") == F.col("id_b"))
-        .filter(jac >= 0.8)
+        set_overlap(cand, tok)
+        .filter(jaccard() >= 0.8)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
         .join(exact, "doc_id", "anti")
     )
 
-    flagged_e = exact.withColumn("_e", F.lit(1))
-    flagged_n = near.withColumn("_n", F.lit(1))
-    return (
-        batch.select("doc_id", "lang")
-        .join(flagged_e, "doc_id", "left")
-        .join(flagged_n, "doc_id", "left")
-        .groupBy("lang")
-        .agg(
-            F.count("*").cast("bigint").alias("n_new"),
-            F.sum(F.coalesce("_e", F.lit(0))).cast("bigint").alias(
-                "n_exact_dup"
-            ),
-            F.sum(F.coalesce("_n", F.lit(0))).cast("bigint").alias(
-                "n_near_dup"
-            ),
-            F.sum(
-                (F.col("_e").isNull() & F.col("_n").isNull()).cast("int")
-            ).cast("bigint").alias("n_kept"),
-        )
-        .orderBy("lang")
-    )
+    return _batch_dup_report(batch, exact, near)
 
 
 @register(
@@ -8416,12 +8257,6 @@ def incremental_dedup_partitioned_text(
 
     # tier 3: candidate-proportional on BOTH axes — shuffle (semi-join
     # before tokenize) AND IO (DPP-pruned partitioned text fetch)
-    def tokenize(rel: DataFrame) -> DataFrame:
-        return rel.select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split("text", " "))).alias("w"),
-        )
-
     cand_a = (
         cand.select(F.col("id_a").alias("doc_id"))
         .distinct()
@@ -8435,60 +8270,24 @@ def incremental_dedup_partitioned_text(
     )
     # the DPP join: pbkt is a partition column on the scan side and a
     # join key, so the runtime subquery prunes unqualified partitions
-    tok_a = tokenize(
+    tok_a = word_set(
         itext.join(F.broadcast(cand_a), ["pbkt", "doc_id"], "semi")
     ).transform(ckpt)  # candidate-bounded words; sizes + inter read it
     cand_b = cand.select(F.col("id_b").alias("doc_id")).distinct()
-    tok_b = tokenize(
+    tok_b = word_set(
         witht.filter(is_new)
         .select("doc_id", "text")
         .join(cand_b, "doc_id", "semi")
     ).transform(ckpt)
-    sz_a = tok_a.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    sz_b = tok_b.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    inter = (
-        cand.join(tok_a.alias("ta"), F.col("ta.doc_id") == F.col("id_a"))
-        .join(
-            tok_b.alias("tb"),
-            (F.col("tb.doc_id") == F.col("id_b"))
-            & (F.col("ta.w") == F.col("tb.w")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("sa.sz") + F.col("sb.sz") - F.col("n_common")
-    )
     near = (
-        inter.join(sz_a.alias("sa"), F.col("sa.doc_id") == F.col("id_a"))
-        .join(sz_b.alias("sb"), F.col("sb.doc_id") == F.col("id_b"))
-        .filter(jac >= 0.8)
+        set_overlap(cand, tok_a, tok_b)
+        .filter(jaccard() >= 0.8)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
         .join(exact, "doc_id", "anti")
     )
 
-    batch = witht.filter(is_new).select("doc_id", "lang")
-    flagged_e = exact.withColumn("_e", F.lit(1))
-    flagged_n = near.withColumn("_n", F.lit(1))
-    return (
-        batch.join(flagged_e, "doc_id", "left")
-        .join(flagged_n, "doc_id", "left")
-        .groupBy("lang")
-        .agg(
-            F.count("*").cast("bigint").alias("n_new"),
-            F.sum(F.coalesce("_e", F.lit(0))).cast("bigint").alias(
-                "n_exact_dup"
-            ),
-            F.sum(F.coalesce("_n", F.lit(0))).cast("bigint").alias(
-                "n_near_dup"
-            ),
-            F.sum(
-                (F.col("_e").isNull() & F.col("_n").isNull()).cast("int")
-            ).cast("bigint").alias("n_kept"),
-        )
-        .orderBy("lang")
-    )
+    return _batch_dup_report(witht.filter(is_new), exact, near)
 
 
 @register(
@@ -9015,32 +8814,12 @@ def cluster_representative_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = dedup_exact(docs).select(F.col("keep_doc_id").alias("doc_id"))
     s1 = docs.join(keep, "doc_id", "semi")
 
-    cands = portable_band_pairs(portable_signatures(s1)).select(
-        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
-    )
-    tok = s1.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")
-    ).transform(ckpt)  # read by the verify join AND the quality score
-    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    inter = (
-        cands.join(tok.alias("ta"), F.col("ta.doc_id") == F.col("id_a"))
-        .join(
-            tok.alias("tb"),
-            (F.col("tb.doc_id") == F.col("id_b"))
-            & (F.col("ta.w") == F.col("tb.w")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("sa.sz") + F.col("sb.sz") - F.col("n_common")
-    )
+    cands = band_candidates(portable_signatures(s1))
+    tok = word_set(s1).transform(ckpt)  # read by the verify AND the quality score
     verified = (
-        inter.join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("id_a"))
-        .join(sizes.alias("sb"), F.col("sb.doc_id") == F.col("id_b"))
-        .filter(jac >= 0.8)
-        .select("id_a", "id_b")
+        set_overlap(cands, tok).filter(jaccard() >= 0.8).select("id_a", "id_b")
     )
+    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("sz"))
 
     cc = connected_components(verified)
     # qscore = distinct-token count: the sz aggregate already IS it
@@ -9901,12 +9680,6 @@ def incremental_dedup_multi_segment_probe(
     # tier 3: candidate-proportional on BOTH axes — shuffle (semi-join
     # before tokenize) AND IO (DPP-pruned partitioned text fetch for
     # the index+segment side; batch text from the raw relation)
-    def tokenize(rel: DataFrame) -> DataFrame:
-        return rel.select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split("text", " "))).alias("w"),
-        )
-
     cand_a = (
         cand.select(F.col("id_a").alias("doc_id"))
         .distinct()
@@ -9917,57 +9690,21 @@ def incremental_dedup_multi_segment_probe(
         .filter(F.col("doc_id") >= 0)
         .withColumn("pbkt", F.pmod(F.col("doc_id"), F.lit(n_pbkt)))
     )
-    tok_a = tokenize(
+    tok_a = word_set(
         itext.join(F.broadcast(cand_a), ["pbkt", "doc_id"], "semi")
     ).transform(ckpt)  # candidate-bounded words; sizes + inter read it
     cand_b = cand.select(F.col("id_b").alias("doc_id")).distinct()
-    tok_b = tokenize(
+    tok_b = word_set(
         batch.select("doc_id", "text").join(cand_b, "doc_id", "semi")
     ).transform(ckpt)
-    sz_a = tok_a.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    sz_b = tok_b.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    inter = (
-        cand.join(tok_a.alias("ta"), F.col("ta.doc_id") == F.col("id_a"))
-        .join(
-            tok_b.alias("tb"),
-            (F.col("tb.doc_id") == F.col("id_b"))
-            & (F.col("ta.w") == F.col("tb.w")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("sa.sz") + F.col("sb.sz") - F.col("n_common")
-    )
     near = (
-        inter.join(sz_a.alias("sa"), F.col("sa.doc_id") == F.col("id_a"))
-        .join(sz_b.alias("sb"), F.col("sb.doc_id") == F.col("id_b"))
-        .filter(jac >= 0.8)
+        set_overlap(cand, tok_a, tok_b)
+        .filter(jaccard() >= 0.8)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
         .join(exact, "doc_id", "anti")
     )
-    flagged_e = exact.withColumn("_e", F.lit(1))
-    flagged_n = near.withColumn("_n", F.lit(1))
-    return (
-        batch.select("doc_id", "lang")
-        .join(flagged_e, "doc_id", "left")
-        .join(flagged_n, "doc_id", "left")
-        .groupBy("lang")
-        .agg(
-            F.count("*").cast("bigint").alias("n_new"),
-            F.sum(F.coalesce("_e", F.lit(0))).cast("bigint").alias(
-                "n_exact_dup"
-            ),
-            F.sum(F.coalesce("_n", F.lit(0))).cast("bigint").alias(
-                "n_near_dup"
-            ),
-            F.sum(
-                (F.col("_e").isNull() & F.col("_n").isNull()).cast("int")
-            ).cast("bigint").alias("n_kept"),
-        )
-        .orderBy("lang")
-    )
+    return _batch_dup_report(batch, exact, near)
 
 
 @register(
@@ -10149,23 +9886,14 @@ def candidate_jaccard_scores(docs: DataFrame) -> DataFrame:
     corpus).  Zero-overlap candidates (pure hash collisions) survive
     with ``n_common = 0`` via the left join — label policy is the
     caller's."""
-    cand = (
-        portable_band_pairs(portable_signatures(docs))
-        .select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"))
-        .transform(ckpt)  # endpoints projection + inter + scored read it
-    )
+    # endpoints projection + inter + scored read it
+    cand = band_candidates(portable_signatures(docs)).transform(ckpt)
     cand_ids = cand.select(
         F.explode(F.array("id_a", "id_b")).alias("doc_id")
     ).distinct()
-    tok = (
-        docs.select("doc_id", "text")
-        .join(cand_ids, "doc_id", "semi")
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split("text", " "))).alias("w"),
-        )
-        .transform(ckpt)  # sizes + both intersection sides read it
-    )
+    tok = word_set(
+        docs.select("doc_id", "text").join(cand_ids, "doc_id", "semi")
+    ).transform(ckpt)  # sizes + both intersection sides read it
     sizes = tok.groupBy("doc_id").agg(F.count("*").alias("sz"))
     inter = (
         cand.join(tok.alias("ta"), F.col("ta.doc_id") == F.col("id_a"))
@@ -10275,9 +10003,7 @@ def cross_source_contamination_matrix(
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     scored = candidate_jaccard_scores(docs)
-    jac = F.col("n_common").cast("double") / (
-        F.col("sz_a") + F.col("sz_b") - F.col("n_common")
-    )
+    jac = jaccard()
     meta = docs.select("doc_id", "source")
     srcd = (
         scored.filter(jac >= 0.8)
@@ -10365,9 +10091,7 @@ def cross_source_contamination_matrix(
 def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     scored = candidate_jaccard_scores(docs)
-    jac = F.col("n_common").cast("double") / (
-        F.col("sz_a") + F.col("sz_b") - F.col("n_common")
-    )
+    jac = jaccard()
     labeled = scored.select(
         "id_a",
         "id_b",
@@ -10824,29 +10548,53 @@ def _sq8_roundtrip_sse() -> Column:
     return _sq8_nano_sse("embedding", _SQ8_CODE_SQL, null_safe=False)
 
 
+def _sq8_probe_lists(bits: int) -> Column:
+    """The probe lists of a query's home list ``cl0``: home first, then
+    every Hamming-1 neighbour in plane order (the order
+    ``_ann_probe_parents`` truncates)."""
+    return F.array(
+        F.col("cl0"), *[F.col("cl0").bitwiseXOR(F.lit(1 << i)) for i in range(bits)]
+    )
+
+
+def _sq8_query_sample(emb: DataFrame, *cols: Column) -> DataFrame:
+    """(qid, qv, *cols) — the 1% query sample every SQ8 tier and audit
+    probes with."""
+    return emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"), *cols
+    )
+
+
 def _sq8_probe_set(emb: DataFrame, bits: int) -> DataFrame:
     """(qid, qv, cl) — the query sample with home + every-Hamming-1
     multi-probe fan-out, shared verbatim by every SQ8 tier."""
+    return _sq8_query_sample(emb, _rp_cluster_spark(bits).alias("cl0")).select(
+        "qid", "qv", F.explode(_sq8_probe_lists(bits)).alias("cl")
+    )
+
+
+def _sq8_exact_top3(emb: DataFrame) -> DataFrame:
+    """(qid, nid, rn) — the exact baseline every SQ8 recall audit
+    scores against: per sampled query, the top-3 neighbours by
+    integer-nano-unit squared L2 with the (dist, id) tiebreak.  The
+    query sample broadcasts; the corpus never moves.  Not cut: a
+    caller that reads it twice checkpoints it."""
+    from pyspark.sql import Window as W
+
+    c = emb.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("cv"))
+    l2_nano = F.expr(
+        f"aggregate(sequence(1, {_RP_DIM}), 0L, (acc, d) -> acc + "
+        "cast(round(pow(cast(element_at(qv, d) as double) - "
+        "cast(element_at(cv, d) as double), 2) * 1e9, 0) as bigint))"
+    )
+    pairs = c.join(
+        F.broadcast(_sq8_query_sample(emb)), F.col("nid") != F.col("qid")
+    ).select("qid", "nid", l2_nano.alias("dn"))
+    w = W.partitionBy("qid").orderBy(F.asc("dn"), F.asc("nid"))
     return (
-        emb.filter(F.col("vec_id") % 100 == 0)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qv"),
-            _rp_cluster_spark(bits).alias("cl0"),
-        )
-        .select(
-            "qid",
-            "qv",
-            F.explode(
-                F.array(
-                    F.col("cl0"),
-                    *[
-                        F.col("cl0").bitwiseXOR(F.lit(1 << i))
-                        for i in range(bits)
-                    ],
-                )
-            ).alias("cl"),
-        )
+        pairs.withColumn("rn", F.row_number().over(w).cast("int"))
+        .filter(F.col("rn") <= 3)
+        .select("qid", "nid", "rn")
     )
 
 
@@ -11280,30 +11028,9 @@ def _sq8_recall_report(
     list_recall_ceiling − recall_at_3 (what pruning leaves on the
     table is the ceiling; what quantization + stale ranges cost is
     the gap)."""
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-    )
-    c = emb.select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("cv")
-    )
-    l2_nano = F.expr(
-        f"aggregate(sequence(1, {_RP_DIM}), 0L, (acc, d) -> acc + "
-        "cast(round(pow(cast(element_at(qv, d) as double) - "
-        "cast(element_at(cv, d) as double), 2) * 1e9, 0) as bigint))"
-    )
-    pairs = c.join(F.broadcast(q), F.col("nid") != F.col("qid")).select(
-        "qid", "nid", l2_nano.alias("dn")
-    )
-    w = W.partitionBy("qid").orderBy(F.asc("dn"), F.asc("nid"))
-    exact3 = (
-        pairs.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "nid", "rn")
-        .transform(ckpt)  # read by the recall join AND the top-1 join
-    )
+    # read by the recall join AND the top-1 join
+    exact3 = _sq8_exact_top3(emb).transform(ckpt)
     sq8 = tier(spark, sf_dir).transform(ckpt)
     # pruning CEILING: fraction of exact top-3 reachable through the
     # tier's probe lists (home + Hamming-1) — recall_at_3 can never
@@ -13384,21 +13111,9 @@ def ann_probe_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     t_codes, t_stats, bits, _n_bkts = _build_persisted_ann_index(
         spark, emb, "annpbc"
     )
-    q = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qv"),
-        _rp_cluster_spark(bits).alias("cl0"),
-    )
     # each probe carries its rank (pidx) in the _ann_probe_parents order
-    probes = q.select(
-        "qid",
-        "qv",
-        F.posexplode(
-            F.array(
-                F.col("cl0"),
-                *[F.col("cl0").bitwiseXOR(F.lit(1 << i)) for i in range(bits)],
-            )
-        ).alias("pidx", "cl"),
+    probes = _sq8_query_sample(emb, _rp_cluster_spark(bits).alias("cl0")).select(
+        "qid", "qv", F.posexplode(_sq8_probe_lists(bits)).alias("pidx", "cl")
     )
     qs = _sq8_fan_to_children(spark, probes, t_stats, bits).transform(
         ckpt
@@ -13419,23 +13134,7 @@ def ann_probe_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ncand = byb.groupBy("b").agg(
         F.count("*").cast("bigint").alias("n_cand")
     )
-    # exact baseline on the same sample (the declared exact-baseline
-    # pattern: query sample broadcasts, corpus never moves)
-    c = emb.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("cv"))
-    l2_nano = F.expr(
-        f"aggregate(sequence(1, {_RP_DIM}), 0L, (acc, d) -> acc + "
-        "cast(round(pow(cast(element_at(qv, d) as double) - "
-        "cast(element_at(cv, d) as double), 2) * 1e9, 0) as bigint))"
-    )
-    pairs = c.join(
-        F.broadcast(q.select("qid", "qv")), F.col("nid") != F.col("qid")
-    ).select("qid", "nid", l2_nano.alias("dn"))
-    we = W.partitionBy("qid").orderBy(F.asc("dn"), F.asc("nid"))
-    exact3 = (
-        pairs.withColumn("rn", F.row_number().over(we).cast("int"))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "nid")
-    )
+    exact3 = _sq8_exact_top3(emb).select("qid", "nid")
     budgets = (
         spark.range(1)
         .select(F.explode(F.expr(f"sequence(1, {bits + 1})")).alias("b"))

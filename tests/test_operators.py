@@ -17,8 +17,11 @@ from causality_between_elements_based_on_time_series_data_spark.functions.scalar
 from causality_between_elements_based_on_time_series_data_spark.operators.asof import asof_lookup
 from causality_between_elements_based_on_time_series_data_spark.operators.dedup import (
     dedup_exact,
+    jaccard,
     lsh_candidate_pairs,
     minhash_signatures,
+    set_overlap,
+    word_set,
 )
 from causality_between_elements_based_on_time_series_data_spark.operators.similarity import (
     brute_force_cosine_topk,
@@ -256,6 +259,54 @@ def test_dedup_pipeline_removes_planted_duplicates(spark, sf_dir):
     # genuine token-set near-dups of its own — allow their removal, but
     # the pipeline must not gut the corpus
     assert ids <= set(range(60)) and len(ids) >= 55
+
+
+def test_word_set_keeps_one_row_per_distinct_word(spark):
+    docs = spark.createDataFrame(
+        [(1, "a b a c b"), (2, "x"), (3, "y y y")], "doc_id bigint, text string"
+    )
+    got = sorted(tuple(r) for r in word_set(docs).collect())
+    assert got == [(1, "a"), (1, "b"), (1, "c"), (2, "x"), (3, "y")]
+
+
+def _overlap_rows(cand, tok_a, tok_b=None):
+    out = set_overlap(cand, tok_a, tok_b).select(
+        "id_a", "id_b", "n_common", "sz_a", "sz_b", F.round(jaccard(), 6)
+    )
+    return sorted(tuple(r) for r in out.collect())
+
+
+def test_set_overlap_counts_shared_tokens_per_side(spark):
+    """Known intersections and per-side set sizes when the two sides
+    have different posting lists; a candidate pair with no shared
+    token is absent; the answer does not depend on partitioning."""
+    tok_a = word_set(
+        spark.createDataFrame(
+            [(1, "a b c a"), (2, "x y")], "doc_id bigint, text string"
+        )
+    )
+    tok_b = word_set(
+        spark.createDataFrame(
+            [(10, "a b d"), (11, "c c e"), (12, "q r")],
+            "doc_id bigint, text string",
+        )
+    )
+    cand = spark.createDataFrame(
+        [(1, 10), (1, 11), (2, 12), (1, 12)], "id_a bigint, id_b bigint"
+    )
+    want = [(1, 10, 2, 3, 3, 0.5), (1, 11, 1, 3, 2, 0.25)]
+    assert _overlap_rows(cand, tok_a, tok_b) == want
+    for n in (1, 8):
+        assert (
+            _overlap_rows(cand.repartition(n), tok_a.repartition(n), tok_b.repartition(n))
+            == want
+        )
+    # one posting list for both sides (the default): sizes from tok_a
+    docs = spark.createDataFrame(
+        [(1, "a b c"), (2, "a b c d"), (3, "z")], "doc_id bigint, text string"
+    )
+    pairs = spark.createDataFrame([(1, 2), (1, 3)], "id_a bigint, id_b bigint")
+    assert _overlap_rows(pairs, word_set(docs)) == [(1, 2, 3, 3, 4, 0.75)]
 
 
 def test_range_join_boundary_semantics(spark):

@@ -44,6 +44,11 @@ FACTORS = [int(x) for x in os.environ.get(
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from causality_between_elements_based_on_time_series_data_spark.operators.dedup import (
+        jaccard,
+        set_overlap,
+        word_set,
+    )
     from causality_between_elements_based_on_time_series_data_spark.plans.queries_llm import (
         _MH_MAX_BUCKET,
         band_rows,
@@ -208,34 +213,12 @@ def main() -> None:
             corpus_text = batch.select("doc_id", "text").unionByName(
                 spark.table(t_docs).select("doc_id", "text")
             )
-            tok = (
+            tok = word_set(
                 corpus_text.join(cand_ids, "doc_id", "semi")
-                .select(
-                    "doc_id",
-                    F.explode(
-                        F.array_distinct(F.split("text", " "))
-                    ).alias("w"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            sizes = tok.groupBy("doc_id").agg(F.count("*").alias("sz"))
-            inter = (
-                cand.join(tok.alias("ta"), F.col("ta.doc_id") == F.col("id_a"))
-                .join(
-                    tok.alias("tb"),
-                    (F.col("tb.doc_id") == F.col("id_b"))
-                    & (F.col("ta.w") == F.col("tb.w")),
-                )
-                .groupBy("id_a", "id_b")
-                .agg(F.count("*").alias("n_common"))
-            )
-            jac = F.col("n_common").cast("double") / (
-                F.col("sa.sz") + F.col("sb.sz") - F.col("n_common")
-            )
+            ).localCheckpoint(eager=False)
             near = (
-                inter.join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("id_a"))
-                .join(sizes.alias("sb"), F.col("sb.doc_id") == F.col("id_b"))
-                .filter(jac >= 0.8)
+                set_overlap(cand, tok)
+                .filter(jaccard() >= 0.8)
                 .select(F.col("id_b").alias("doc_id"))
                 .distinct()
             )
